@@ -55,11 +55,6 @@ object Bench {
       // timing out and killing tasks (round-1 driver bench died this way).
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
-      // cap-report observability runs an eager job per dedup-operator
-      // CONSTRUCTION; the bench constructs every query fresh each pass, so
-      // that monitoring job would be billed to every dedup query every
-      // pass (~0.3-1 s each). Off here only; the library default stays on.
-      .config("spark.graft.dedup.reportCaps", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     System.err.println(f"[bench] SparkSession up at t=${(System.nanoTime() - jvmUp) / 1e9}%.1fs")

@@ -1529,7 +1529,7 @@ object SparkEntry {
       * all-pairs); the oracle brute-forces the identical hash set in
       * DuckDB, so LSH recall is certified against ground truth. Bucket
       * cap set beyond corpus size: zero drops, matching the oracle's
-      * full recall (the cap path is pinned by DedupSpec). */
+      * full recall (the capped regime is pinned by PerceptualHashSpec). */
     "media_phash_neardup" -> ((s, d) =>
       graft.ops.PerceptualHash.phashPairs(
           graft.ops.PerceptualHash.synthesizeNearDupImages(

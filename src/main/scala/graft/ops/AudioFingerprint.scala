@@ -151,7 +151,13 @@ object AudioFingerprint {
   }
 
   /** Audio near-dup pairs end-to-end: decode → fingerprint → banded
-    * Hamming LSH → exact-verified `(doc_a, doc_b, hamming)`. */
+    * Hamming LSH ([[Dedup.signaturePairs]]) → exact-verified
+    * `(doc_a, doc_b, hamming)`; undecodable clips (NULL fingerprint) pair
+    * with nothing. `maxBucketSize` counts member rows per LSH bucket:
+    * with no bucket over it the output is exactly the brute-force pair
+    * set; buckets over it (e.g. runs of silent clips sharing one
+    * fingerprint) are dropped and reported via the dedup cap report, and
+    * the output is then a subset of the exact result. */
   def afpPairs(df: DataFrame, maxHamming: Int = 6,
                maxBucketSize: Int = 1000,
                idCol: String = "doc_id", mediaCol: String = "media",

@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   *    pairs come either from an LSH band bucket join (MinHash / SimHash) or
   *    an explicit blocking key (language × length bucket). Bucket skew is
   *    capped (`maxBucketSize`) so one hot bucket can't quadratic-blow a task;
+  *  - the Hamming-LSH generators ([[simhashPairs]], [[signaturePairs]],
+  *    [[signaturePairsIncremental]]) share one cap contract: the cap
+  *    counts MEMBER ROWS per bucket; with nothing capped the output is
+  *    exactly the brute-force pair set, with capped buckets a subset of
+  *    it, and every capped call is reported ([[capReports]] + a warning);
   *  - everything is built-in/higher-order functions — whole-stage codegen,
   *    no UDF serialization on the hot path.
   */
@@ -33,23 +38,16 @@ object Dedup {
   val capReports = new java.util.concurrent.ConcurrentHashMap[String, CapReport]()
 
   /** Measure what a bucket cap is about to drop: one bounded aggregate
-    * over the (tiny, already-grouped) bucket-size relation, warn-logged
-    * immediately — silently-dropped near-dup recall is the one production
-    * failure mode the declarative plan can't surface. Runs as a small
-    * eager job at operator-construction time; since the underlying key
-    * relation is lazily checkpointed, this also materializes it once for
-    * the main query to reuse. (A zero-job `observe` variant was tried
-    * first: these pipelines branch the capped relation into BOTH
-    * self-join sides, and Spark silently drops metrics from duplicated
-    * CollectMetrics nodes.) */
-  private def reportCaps(bucketSizes: DataFrame, op: String,
-                         cap: Int): Option[CapReport] = {
-    // spark.graft.dedup.reportCaps=false skips the eager report job (a
-    // benchmark that times many dedup constructions back-to-back pays a
-    // scheduling round per call); keep the DEFAULT on — silently-dropped
-    // recall is the failure mode this exists to surface
-    if (!bucketSizes.sparkSession.conf
-        .get("spark.graft.dedup.reportCaps", "true").toBoolean) return None
+    * over the (tiny, already-grouped) bucket-size relation `bsz` (member
+    * rows per bucket), warn-logged immediately — silently-dropped near-dup
+    * recall is the one production failure mode the declarative plan
+    * can't surface. Runs as a small eager job at operator-construction
+    * time; since the underlying key relation is lazily checkpointed, this
+    * also materializes it once for the main query to reuse. (A zero-job
+    * `observe` variant was tried first: these pipelines branch the capped
+    * relation into BOTH self-join sides, and Spark silently drops metrics
+    * from duplicated CollectMetrics nodes.) */
+  private def reportCaps(bucketSizes: DataFrame, op: String, cap: Int): Unit = {
     val r = bucketSizes.filter(col("bsz") > cap)
       .agg(count(lit(1)), coalesce(sum(col("bsz")), lit(0L))).head()
     val report = CapReport(r.getLong(0), r.getLong(1), cap)
@@ -59,23 +57,7 @@ object Dedup {
         s"maxBucketSize=$cap were dropped (${report.droppedRows} member rows " +
         "lose near-dup candidate recall) — raise the cap or pre-block the " +
         "corpus if this mass matters")
-    Some(report)
   }
-
-  /** First-clean single emission diverges from distinct() emission exactly
-    * when a bucket actually capped: a pair whose lex-first clean bucket
-    * was dropped is lost even if a surviving bucket holds it. Silent at
-    * runtime otherwise — warn loudly when the degenerate regime is hit. */
-  private def warnFirstCleanDivergence(op: String,
-                                       report: Option[CapReport]): Unit =
-    report.filter(_.cappedBuckets > 0).foreach { r =>
-      log.warn(
-        s"graft.dedup.$op: first-clean single emission is active with " +
-          s"${r.cappedBuckets} capped bucket(s) — pairs whose lex-first " +
-          "clean bucket was dropped are LOST even when another surviving " +
-          "bucket holds them (divergence from distinct() emission); raise " +
-          "maxBucketSize above the hot-bucket size or pre-block the corpus")
-    }
 
   // ------------------------------------------------------------ exact
 
@@ -147,9 +129,8 @@ object Dedup {
     // cap via size-agg + left-semi, NOT a count window: the shingle
     // arrays are wide, and WindowExec buffers + copies every row of a
     // partition group through its row buffer — measured 65% slower than
-    // letting the semi join stream them (the window-cap shape is right
-    // for the NARROW signature relations in pairsFromChunked, wrong for
-    // payload-carrying rows)
+    // letting the semi join stream them (a window cap suits only narrow
+    // key relations, not payload-carrying rows)
     val blockSizes = sh.groupBy(langCol, "len_bkt").agg(count(lit(1)).as("bsz"))
     if (!routeOversized) reportCaps(blockSizes, "jaccard_blocks", maxBlockSize)
     val smallBlocks = blockSizes.filter(col("bsz") <= maxBlockSize)
@@ -409,35 +390,9 @@ object Dedup {
   def simhash(textCol: String): Column =
     graft.functions.TextFunctions.simhash64(col(textCol))
 
-  /** SimHash near-dup pairs: candidates share at least one CHUNK-PAIR key —
-    * the 64-bit fingerprint is split into `maxHamming + 2` chunks and every
-    * unordered pair of chunks forms one key. Pigeonhole: ≤ maxHamming
-    * differing bits touch ≤ maxHamming chunks, so ≥ 2 chunks agree, so ≥ 1
-    * pair key collides — candidate recall is 100% for qualifying pairs,
-    * exactly like the classic 1-of-(h+1) single-chunk scheme. Candidates
-    * are then verified by exact Hamming distance via bit_count(xor).
-    *
-    * Density: a single-chunk key for h=3 is 16 bits → expected bucket size
-    * n/2^16, which hits the `maxBucketSize` cap (and starts dropping mass)
-    * around 10⁷ docs. A pair key is ~26 bits → expected bucket n/2^26, i.e.
-    * the ceiling moves to ~10¹⁰ docs for ~2.5× more exploded rows
-    * (C(h+2,2) vs h+1 keys per doc) — the right trade at corpus scale.
-    * `blockCols` optionally pre-splits the corpus (e.g. by lang) so keys
-    * only collide within a block, multiplying the ceiling by the block
-    * count; near-dups spanning different block values are then missed. */
-  /** One row per (doc, chunk-pair key): the LSH candidate-key relation the
-    * pair join buckets on. Shared by [[simhashPairs]] and the density
-    * diagnostic [[simhashBucketStats]]. */
-  private def simhashChunked(df: DataFrame, maxHamming: Int,
-                             idCol: String, textCol: String,
-                             blockCols: Seq[String]): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(df.sparkSession)
-    chunkPairKeyed(df, simhash(textCol), maxHamming, idCol, blockCols)
-  }
-
   /** Bit layout of the `maxHamming + 2`-chunk signature split — ONE
-    * place, so the key builder ([[chunkPairKeyed]]) and the first-clean
-    * single-emission filter ([[firstCleanChunkPair]]) can never drift:
+    * place, so the key builder ([[withChunkPairKeys]]) and the first-clean
+    * single-emission filter ([[firstCleanEmission]]) can never drift:
     * 64 bits distributed as evenly as possible across the chunks. */
   private def chunkLayout(maxHamming: Int): (Array[Int], Array[Int]) = {
     val nChunks = maxHamming + 2
@@ -446,28 +401,19 @@ object Dedup {
     (widths, widths.scanLeft(0)(_ + _).init)
   }
 
-  /** Bucket caps at or above this value switch the pair generators from
-    * distinct()-deduped emission to FIRST-CLEAN-CHUNK single emission
-    * ([[firstCleanChunkPair]]). The two are bit-identical whenever no
-    * bucket actually exceeds the cap; they can differ only for a pair
-    * whose first clean bucket was dropped while another surviving bucket
-    * held it (kept under distinct, dropped under first-clean) — with a
-    * cap of 10⁶+ rows per (chunk-pair, value) bucket that is already the
-    * degenerate mass-drop regime the cap exists to amputate. */
-  private val ExactOnceCapFloor = 1000000
-
   /** TRUE exactly when the candidate row's own chunk-pair is the
     * LEX-FIRST clean one for its signature pair — the single-emission
     * predicate. A pair colliding in bucket (a, b) has chunks a and b
     * clean (equal) by construction, so of its C(h+2,2)-way duplicated
     * join rows exactly the one whose (a, b) are the two SMALLEST clean
-    * chunks passes — no distinct() exchange needed downstream. Kept
-    * FLAT for codegen: a clean-chunk bitmask (one n-term sum over the
-    * XOR) and a single mask compare, with the row's own (a, b) looked
-    * up from literal arrays by the posexplode index. (A 45-branch
-    * nested CaseWhen formulation of the same predicate fell out of
-    * whole-stage codegen and measured 10x SLOWER than the distinct()
-    * it replaced.) */
+    * chunks passes — no distinct() exchange needed downstream. Two
+    * identical signatures are clean everywhere, so they pass only in
+    * their chunk-pair-0 bucket. Kept FLAT for codegen: a clean-chunk
+    * bitmask (one n-term sum over the XOR) and a single mask compare,
+    * with the row's own (a, b) looked up from literal arrays by the
+    * posexplode index. (A 45-branch nested CaseWhen formulation of the
+    * same predicate fell out of whole-stage codegen and measured 10x
+    * SLOWER than a distinct() over the candidate stream.) */
   private def firstCleanEmission(xorCol: Column, chunkCol: Column,
                                  maxHamming: Int): Column = {
     val (widths, offsets) = chunkLayout(maxHamming)
@@ -491,23 +437,18 @@ object Dedup {
     cleanMask.bitwiseAND(belowB) === aBit
   }
 
-  /** The chunk-pair key relation for an ARBITRARY 64-bit signature
-    * expression — the machinery [[simhashPairs]] buckets text SimHash
-    * on, factored out so perceptual signatures (image pHash, audio
-    * fingerprints) ride the same scale path. One row per (doc,
-    * chunk-pair key). */
-  /** NARROW signature proxy materialized once (lazy localCheckpoint):
-    * every pair generator references it 2-3 times (self-join sides, the
-    * member-expansion joins), and exchange reuse across those plan
-    * branches is not guaranteed — without this the expensive upstream
-    * (image/audio DECODE, signature kernels) runs per branch. ~16-24
-    * B/doc persisted; the C(h+2,2)x-exploded key relation is
-    * deliberately NOT persisted (recomputing the shifts from the proxy
-    * is cheaper than materializing it — guide §8: persist the proxy,
-    * move/recompute the bulk). */
+  /** NARROW signature proxy `(id, blockCols…, sig)` materialized once
+    * (lazy localCheckpoint): every pair generator references it 2-3 times
+    * (signature grouping, the member-expansion joins), and exchange reuse
+    * across those plan branches is not guaranteed — without this the
+    * expensive upstream (image/audio DECODE, signature kernels) runs per
+    * branch. ~16-24 B/doc persisted. Rows with a NULL id or a NULL
+    * signature (undecodable payloads) are dropped here: they can pair
+    * with nothing. */
   private def sigProxy(df: DataFrame, sig: Column, idCol: String,
                        blockCols: Seq[String]): DataFrame =
     df.select(col(idCol) +: blockCols.map(col) :+ sig.as("sig"): _*)
+      .filter(col(idCol).isNotNull && col("sig").isNotNull)
       .localCheckpoint(false)
 
   /** Explode a relation carrying a `sig` column into its chunk-pair LSH
@@ -525,69 +466,118 @@ object Dedup {
       posexplode(array(pairKeys: _*)).as(Seq("chunk", "ckey")): _*)
   }
 
-  private def chunkPairKeyed(df: DataFrame, sig: Column, maxHamming: Int,
-                             idCol: String,
-                             blockCols: Seq[String]): DataFrame =
-    withChunkPairKeys(sigProxy(df, sig, idCol, blockCols), maxHamming)
+  /** The LSH key relation over DISTINCT signatures: one row per (block,
+    * signature, chunk-pair key), carrying the signature's member count
+    * `__n`. Banding and joining run over signature values, never member
+    * rows (the compressed-index idea: real corpora are heavily twinned —
+    * re-uploads, re-encodes hitting one perceptual hash — and the sf0.1
+    * media fixtures collapse 5000 docs to 263 pHash / 34 audio
+    * signatures); members come back only in the output expansion. */
+  private def keyedSigs(proxy: DataFrame, maxHamming: Int,
+                        blockCols: Seq[String]): DataFrame =
+    withChunkPairKeys(proxy.groupBy(blockCols.map(col) :+ col("sig"): _*)
+      .agg(count(lit(1)).as("__n")), maxHamming)
 
-  /** Density diagnostic for the chunk-pair LSH: per-bucket populations with
-    * an `oversized` flag, so a scale probe can assert "no mass dropped" at a
-    * target corpus size instead of trusting the 2^26-key-space math. */
+  /** Bucket population in MEMBER ROWS: Σ`__n` over the distinct
+    * signatures of a (block, chunk, ckey) bucket. */
+  private def bucketSizes(keyed: DataFrame, blockCols: Seq[String]): DataFrame = {
+    val keyCols = blockCols :+ "chunk" :+ "ckey"
+    keyed.groupBy(keyCols.map(col): _*).agg(sum(col("__n")).as("bsz"))
+  }
+
+  /** THE Hamming-LSH bucket cap, shared by the batch and incremental
+    * generators: buckets holding more than `maxBucketSize` member rows
+    * are reported ([[reportCaps]]) and removed by a broadcast ANTI-join
+    * against the (normally EMPTY) hot-bucket set. The trailing
+    * repartition on the bucket key sits below every per-side alias
+    * projection, so both sides of a self-join see identical exchange
+    * children and ReusedExchange fires. */
+  private def capBuckets(keyed: DataFrame, op: String, maxBucketSize: Int,
+                         blockCols: Seq[String]): DataFrame = {
+    val keyCols = blockCols :+ "chunk" :+ "ckey"
+    val sizes = bucketSizes(keyed, blockCols)
+    reportCaps(sizes, op, maxBucketSize)
+    val hot = sizes.filter(col("bsz") > maxBucketSize)
+      .select(keyCols.map(col): _*)
+    keyed.join(broadcast(hot), keyCols, "left_anti")
+      .repartition(keyCols.map(col): _*)
+  }
+
+  /** Density diagnostic for the chunk-pair LSH: per-bucket populations
+    * (member rows, the unit [[simhashPairs]] caps on) with an `oversized`
+    * flag, so a scale probe can assert "no mass dropped" at a target
+    * corpus size instead of trusting the 2^26-key-space math. */
   def simhashBucketStats(df: DataFrame, maxHamming: Int = 3,
                          maxBucketSize: Int = 1000,
                          idCol: String = "doc_id", textCol: String = "text",
                          blockCols: Seq[String] = Nil): DataFrame = {
-    val keyCols = blockCols :+ "chunk" :+ "ckey"
-    simhashChunked(df, maxHamming, idCol, textCol, blockCols)
-      .groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bsz"))
+    graft.functions.TextFunctions.ensureRegistered(df.sparkSession)
+    val proxy = sigProxy(df, simhash(textCol), idCol, blockCols)
+    bucketSizes(keyedSigs(proxy, maxHamming, blockCols), blockCols)
       .withColumn("oversized", col("bsz") > maxBucketSize)
   }
 
+  /** SimHash near-dup pairs `(doc_a, doc_b, hamming)`, doc_a < doc_b,
+    * hamming ≤ maxHamming: [[signaturePairs]] over the text's
+    * [[simhash]].
+    *
+    * Candidates share at least one CHUNK-PAIR key — the 64-bit
+    * fingerprint is split into `maxHamming + 2` chunks and every
+    * unordered pair of chunks forms one key. Pigeonhole: ≤ maxHamming
+    * differing bits touch ≤ maxHamming chunks, so ≥ 2 chunks agree, so
+    * ≥ 1 pair key collides — candidate recall is 100% for qualifying
+    * pairs. Candidates are verified by exact Hamming distance via
+    * bit_count(xor).
+    *
+    * Density: a single-chunk key for h=3 is 16 bits → expected bucket size
+    * n/2^16, which hits the `maxBucketSize` cap (and starts dropping mass)
+    * around 10⁷ docs. A pair key is ~26 bits → expected bucket n/2^26, i.e.
+    * the ceiling moves to ~10¹⁰ docs for ~2.5× more exploded rows
+    * (C(h+2,2) vs h+1 keys per doc) — the right trade at corpus scale.
+    * `blockCols` optionally pre-splits the corpus (e.g. by lang) so keys
+    * only collide within a block, multiplying the ceiling by the block
+    * count; near-dups spanning different block values are then missed.
+    * The cap contract is [[signaturePairs]]'. */
   def simhashPairs(df: DataFrame, maxHamming: Int = 3,
                    maxBucketSize: Int = 1000,
                    idCol: String = "doc_id", textCol: String = "text",
-                   blockCols: Seq[String] = Nil): DataFrame =
-    if (maxBucketSize >= ExactOnceCapFloor) {
-      graft.functions.TextFunctions.ensureRegistered(df.sparkSession)
-      pairsViaSigCollapse(sigProxy(df, simhash(textCol), idCol, blockCols),
-        "simhash", maxHamming, maxBucketSize, idCol, blockCols)
-    } else
-      pairsFromChunked(
-        simhashChunked(df, maxHamming, idCol, textCol, blockCols),
-        "simhash", maxHamming, maxBucketSize, idCol, blockCols)
+                   blockCols: Seq[String] = Nil): DataFrame = {
+    graft.functions.TextFunctions.ensureRegistered(df.sparkSession)
+    hammingPairs(sigProxy(df, simhash(textCol), idCol, blockCols),
+      "simhash", maxHamming, maxBucketSize, idCol, blockCols)
+  }
 
-  /** Banded Hamming near-dup pairs over a PRECOMPUTED 64-bit signature
-    * column — same chunk-pair LSH, 100%-recall pigeonhole, bucket caps
-    * and exact bit_count verification as [[simhashPairs]], but the
-    * signature arrives in `sigCol` instead of being derived from text.
-    * This is the pair generator for perceptual hashes (image pHash /
-    * dHash, audio fingerprints): decode-side operators compute the
-    * signature per payload, this joins them at corpus scale without
-    * ever forming all pairs. Rows with a null signature (undecodable
-    * payloads) are excluded. Higher `maxHamming` means MORE, NARROWER
-    * chunks — pair keys shrink to ~2·64/(h+2) bits, so the bucket-density
-    * ceiling drops as the radius grows; block on a cheap exact column
-    * (dims, media type) to buy it back. */
+  /** Banded Hamming near-dup pairs `(doc_a, doc_b, hamming)` over a
+    * PRECOMPUTED 64-bit signature column — the chunk-pair LSH of
+    * [[simhashPairs]] with the signature arriving in `sigCol` instead of
+    * being derived from text. This is the pair generator for perceptual
+    * hashes (image pHash / dHash, audio fingerprints): decode-side
+    * operators compute the signature per payload, this joins them at
+    * corpus scale without ever forming all pairs. Rows with a NULL id or
+    * NULL signature are excluded; no row pairs with itself.
+    *
+    * Cap contract: `maxBucketSize` counts MEMBER ROWS per (block, chunk,
+    * ckey) bucket; buckets over it are dropped and reported
+    * ([[capReports]], one warning). With no bucket over the cap the
+    * output is exactly the brute-force pair set. With capped buckets it
+    * is a SUBSET of it: a pair survives when its lex-first clean bucket
+    * survives, and a group of identical signatures larger than the cap
+    * yields no pairs.
+    *
+    * Higher `maxHamming` means MORE, NARROWER chunks — pair keys shrink
+    * to ~2·64/(h+2) bits, so the bucket-density ceiling drops as the
+    * radius grows; block on a cheap exact column (dims, media type) to
+    * buy it back. */
   def signaturePairs(df: DataFrame, maxHamming: Int = 8,
                      maxBucketSize: Int = 1000,
                      idCol: String = "doc_id", sigCol: String = "sig",
                      blockCols: Seq[String] = Nil): DataFrame =
-    if (maxBucketSize >= ExactOnceCapFloor)
-      pairsViaSigCollapse(
-        sigProxy(df.filter(col(sigCol).isNotNull),
-          col(sigCol).cast("long"), idCol, blockCols),
-        "signature", maxHamming, maxBucketSize, idCol, blockCols)
-    else
-      pairsFromChunked(
-        chunkPairKeyed(df.filter(col(sigCol).isNotNull),
-          col(sigCol).cast("long"), maxHamming, idCol, blockCols),
-        "signature", maxHamming, maxBucketSize, idCol, blockCols)
+    hammingPairs(sigProxy(df, col(sigCol).cast("long"), idCol, blockCols),
+      "signature", maxHamming, maxBucketSize, idCol, blockCols)
 
   /** Incremental SimHash near-dup: an arriving text BATCH against the
-    * standing CORPUS — the SimHash twin of [[minhashIncremental]],
-    * riding the shared signature machinery (batch-band ⋈ corpus-band
-    * only; corpus-side bucket caps). Returns
+    * standing CORPUS — the SimHash twin of [[incrementalMinhashPairs]],
+    * [[signaturePairsIncremental]] over the text's [[simhash]]. Returns
     * `(batch_id, corpus_id, hamming)`, hamming ≤ maxHamming. */
   def simhashIncremental(corpus: DataFrame, batch: DataFrame,
                          maxHamming: Int = 3, maxBucketSize: Int = 1000,
@@ -601,200 +591,95 @@ object Dedup {
 
   /** Incremental signature near-dup: an arriving BATCH checked against
     * the standing CORPUS — candidates come ONLY from batch-band ⋈
-    * corpus-band (no corpus×corpus pair ever forms), so the per-batch
-    * cost scales with the batch, exactly like [[minhashIncremental]]
-    * but over any precomputed 64-bit signature (perceptual hashes).
-    * Corpus-side buckets over `maxBucketSize` drop with observability.
-    * Returns `(batch_id, corpus_id, hamming)`, hamming ≤ maxHamming. */
+    * corpus-band over distinct signatures (no corpus×corpus pair ever
+    * forms), so the per-batch cost scales with the batch, exactly like
+    * [[incrementalMinhashPairs]] but over any precomputed 64-bit
+    * signature (perceptual hashes). Returns `(batch_id, corpus_id,
+    * hamming)`, hamming ≤ maxHamming.
+    *
+    * Cap contract as [[signaturePairs]], applied to the CORPUS side (the
+    * side whose hot buckets would blow the join up): `maxBucketSize`
+    * counts corpus member rows per bucket; with nothing capped the
+    * output is exactly the brute-force batch×corpus set, with capped
+    * buckets a subset of it. */
   def signaturePairsIncremental(corpus: DataFrame, batch: DataFrame,
                                 maxHamming: Int = 8,
                                 maxBucketSize: Int = 1000,
                                 idCol: String = "doc_id",
                                 sigCol: String = "sig",
                                 blockCols: Seq[String] = Nil): DataFrame = {
+    val keyCols = blockCols :+ "chunk" :+ "ckey"
+    val blk = blockCols.map(col)
     def proxy(d: DataFrame) =
-      sigProxy(d.filter(col(sigCol).isNotNull),
-        col(sigCol).cast("long"), idCol, blockCols)
-    if (maxBucketSize >= ExactOnceCapFloor)
-      return incrementalViaSigCollapse(proxy(corpus), proxy(batch),
-        "signature-incremental", maxHamming, maxBucketSize, idCol, blockCols)
-    val keyCols = blockCols :+ "chunk" :+ "ckey"
-    def chunked(d: DataFrame) = withChunkPairKeys(proxy(d), maxHamming)
-    val c = chunked(corpus)
-    reportCaps(c.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bsz")), "signature-incremental", maxBucketSize)
-    // corpus-side cap via a count window: one exchange that also
-    // pre-partitions/pre-sorts the corpus side for the batch join (the
-    // old size-agg + left-semi shape shuffled the exploded corpus twice
-    // and localCheckpointed it — see pairsFromChunked)
-    val cc = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCols.map(col): _*)
-      c.withColumn("__bsz", count(lit(1)).over(w))
-        .filter(col("__bsz") <= maxBucketSize)
-        .drop("__bsz")
-    }
-    chunked(batch)
-      .select(keyCols.map(col) :+ col(idCol).as("batch_id") :+
-        col("sig").as("sig_b"): _*)
-      .join(cc.select(keyCols.map(col) :+ col(idCol).as("corpus_id") :+
-        col("sig").as("sig_c"): _*), keyCols)
-      .select(col("batch_id"), col("corpus_id"),
-        bit_count(col("sig_b").bitwiseXOR(col("sig_c"))).as("hamming"))
-      // filter BEFORE distinct (they commute — hamming is a function of
-      // the pair): non-matching candidates never reach the exchange
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** Big-cap pair generation via DISTINCT-SIGNATURE COLLAPSE (guide §2.3
-    * "shuffle keys and metadata instead of payloads", §8): band and
-    * self-join over the distinct signature VALUES per block, then expand
-    * qualifying signature pairs back to member id pairs and add the
-    * intra-signature (hamming 0) pairs. Real corpora are heavily twinned
-    * (exact re-uploads, re-encodes hitting the same perceptual hash), so
-    * the banded join's per-bucket row production drops from |members|²
-    * to |distinct sigs in bucket|² — the measured sf0.1 media fixtures
-    * collapse 5000 docs to 263 (pHash) / 34 (audio) distinct signatures.
-    * The expansion joins are OUTPUT-size work (every emitted pair is a
-    * result row), the unavoidable floor. Exactly equivalent to the
-    * distinct()/brute-force result in the no-drop regime: banding over
-    * distinct sigs keeps the 100%-recall pigeonhole, and `maxBucketSize`
-    * now caps DISTINCT-signature bucket population (buckets only shrink
-    * vs member counting, so a cap that never dropped before still never
-    * drops). */
-  private def pairsViaSigCollapse(proxy: DataFrame, op: String,
-                                  maxHamming: Int, maxBucketSize: Int,
-                                  idCol: String,
-                                  blockCols: Seq[String]): DataFrame = {
-    val keyCols = blockCols :+ "chunk" :+ "ckey"
-    val blk = blockCols.map(col)
-    val uniq = proxy.select(blk :+ col("sig"): _*).distinct()
-    val keyed = withChunkPairKeys(uniq, maxHamming)
-    val capReport = reportCaps(keyed.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bsz")), op, maxBucketSize)
-    warnFirstCleanDivergence(op, capReport)
-    // cap via broadcast ANTI-join against the (normally EMPTY) hot-bucket
-    // set; the explicit repartition below the per-side alias projections
-    // makes both self-join sides' exchange children identical so
-    // ReusedExchange fires (r16 W10)
-    val hot = keyed.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucketSize)
-      .select(keyCols.map(col): _*)
-    val capped = keyed.join(broadcast(hot), keyCols, "left_anti")
-      .repartition(keyCols.map(col): _*)
-    val l = capped.select(keyCols.map(col) :+ col("sig").as("__siga"): _*)
-    val r = capped.select(keyCols.map(col) :+ col("sig").as("__sigb"): _*)
-    // single emission per distinct-sig pair (first-clean chunk filter —
-    // no distinct() exchange over the banded candidate stream)
-    val repPairs = l.join(r, keyCols)
-      .filter(col("__siga") < col("__sigb"))
-      .filter(firstCleanEmission(
-        col("__siga").bitwiseXOR(col("__sigb")), col("chunk"), maxHamming))
-      .select(blk :+ col("__siga") :+ col("__sigb") :+
-        bit_count(col("__siga").bitwiseXOR(col("__sigb"))).as("hamming"): _*)
-      .filter(col("hamming") <= maxHamming)
-    // expansion: every (member of sig_a, member of sig_b) combination,
-    // ordered by id — one output row per qualifying pair
-    val mA = proxy.select(
-      blk :+ col("sig").as("__siga") :+ col(idCol).as("__ida"): _*)
-    val mB = proxy.select(
-      blk :+ col("sig").as("__sigb") :+ col(idCol).as("__idb"): _*)
-    val cross = repPairs
-      .join(mA, blockCols :+ "__siga")
-      .join(mB, blockCols :+ "__sigb")
-      .select(least(col("__ida"), col("__idb")).as("doc_a"),
-        greatest(col("__ida"), col("__idb")).as("doc_b"), col("hamming"))
-    // intra-signature pairs: identical sigs are hamming 0 by definition
-    val sKey = blockCols :+ "sig"
-    val sl = proxy.select(sKey.map(col) :+ col(idCol).as("doc_a"): _*)
-    val sr = proxy.select(sKey.map(col) :+ col(idCol).as("doc_b"): _*)
-    val same = sl.join(sr, sKey)
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(lit(0L)).as("hamming"))
-    cross.unionByName(same)
-  }
-
-  /** Incremental twin of [[pairsViaSigCollapse]]: batch-band ⋈
-    * corpus-band over DISTINCT signatures per side, expanded back to
-    * (batch_id, corpus_id) member pairs. Equal signatures across the
-    * sides are ordinary hamming-0 band collisions here (no intra-side
-    * pairs exist by construction), so no separate same-sig leg. Corpus
-    * side capped as before, counted over distinct signatures. */
-  private def incrementalViaSigCollapse(corpusProxy: DataFrame,
-                                        batchProxy: DataFrame, op: String,
-                                        maxHamming: Int, maxBucketSize: Int,
-                                        idCol: String,
-                                        blockCols: Seq[String]): DataFrame = {
-    val keyCols = blockCols :+ "chunk" :+ "ckey"
-    val blk = blockCols.map(col)
-    val uniqC = corpusProxy.select(blk :+ col("sig"): _*).distinct()
-    val keyedC = withChunkPairKeys(uniqC, maxHamming)
-    val capReport = reportCaps(keyedC.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bsz")), op, maxBucketSize)
-    warnFirstCleanDivergence(op, capReport)
-    val hot = keyedC.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucketSize)
-      .select(keyCols.map(col): _*)
-    val cappedC = keyedC.join(broadcast(hot), keyCols, "left_anti")
-      .repartition(keyCols.map(col): _*)
-    val uniqB = batchProxy.select(blk :+ col("sig"): _*).distinct()
-    val repPairs = withChunkPairKeys(uniqB, maxHamming)
+      sigProxy(d, col(sigCol).cast("long"), idCol, blockCols)
+    val corpusProxy = proxy(corpus)
+    val batchProxy = proxy(batch)
+    val cappedC = capBuckets(keyedSigs(corpusProxy, maxHamming, blockCols),
+      "signature-incremental", maxBucketSize, blockCols)
+    // equal signatures across the sides are ordinary hamming-0 band
+    // collisions here (no intra-side pairs exist by construction)
+    val xor = col("__sigb").bitwiseXOR(col("__sigc"))
+    val sigPairs = keyedSigs(batchProxy, maxHamming, blockCols)
       .select(keyCols.map(col) :+ col("sig").as("__sigb"): _*)
       .join(cappedC.select(keyCols.map(col) :+ col("sig").as("__sigc"): _*),
         keyCols)
-      .filter(firstCleanEmission(
-        col("__sigb").bitwiseXOR(col("__sigc")), col("chunk"), maxHamming))
+      .filter(firstCleanEmission(xor, col("chunk"), maxHamming))
       .select(blk :+ col("__sigb") :+ col("__sigc") :+
-        bit_count(col("__sigb").bitwiseXOR(col("__sigc"))).as("hamming"): _*)
+        bit_count(xor).as("hamming"): _*)
       .filter(col("hamming") <= maxHamming)
     val mB = batchProxy.select(
       blk :+ col("sig").as("__sigb") :+ col(idCol).as("batch_id"): _*)
     val mC = corpusProxy.select(
       blk :+ col("sig").as("__sigc") :+ col(idCol).as("corpus_id"): _*)
-    repPairs
+    sigPairs
       .join(mB, blockCols :+ "__sigb")
       .join(mC, blockCols :+ "__sigc")
       .select(col("batch_id"), col("corpus_id"), col("hamming"))
   }
 
-  private def pairsFromChunked(chunked0: DataFrame, op: String,
-                               maxHamming: Int, maxBucketSize: Int,
-                               idCol: String,
-                               blockCols: Seq[String]): DataFrame = {
+  /** The batch Hamming-LSH pair generator behind [[simhashPairs]] and
+    * [[signaturePairs]]: band and self-join over the DISTINCT signature
+    * values per block ([[keyedSigs]]), capped by member rows
+    * ([[capBuckets]]), one emission per signature pair (first-clean
+    * filter — no distinct() exchange over the banded candidate stream),
+    * then expand each qualifying signature pair to its member id pairs.
+    * The expansion joins are OUTPUT-size work (every emitted pair is a
+    * result row), the unavoidable floor. Identical signatures are a
+    * `__siga = __sigb` pair of the same join, emitted once through their
+    * chunk-pair-0 bucket, and only when the group has ≥ 2 members. */
+  private def hammingPairs(proxy: DataFrame, op: String,
+                           maxHamming: Int, maxBucketSize: Int,
+                           idCol: String,
+                           blockCols: Seq[String]): DataFrame = {
     val keyCols = blockCols :+ "chunk" :+ "ckey"
-    // observability job (eager, conf-gated) — same numbers as before
-    reportCaps(chunked0.groupBy(keyCols.head, keyCols.tail: _*)
-      .agg(count(lit(1)).as("bsz")), op, maxBucketSize)
-    // SMALL-cap shape only (big caps route to [[pairsViaSigCollapse]]):
-    // the count window's single exchange both applies the cap and leaves
-    // the relation hash-partitioned + sorted on exactly the self-join
-    // keys (ReusedExchange across sides). The pre-r16 shape (size
-    // aggregate + left-semi join + localCheckpoint of the exploded
-    // relation) shuffled the C(h+2,2)-times-exploded corpus three times
-    // and PERSISTED it — at 100 TB that materialization is the scale
-    // killer, not the CPU.
-    val capped = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keyCols.map(col): _*)
-      chunked0
-        .withColumn("__bsz", count(lit(1)).over(w))
-        .filter(col("__bsz") <= maxBucketSize)
-        .drop("__bsz")
-    }
-    val l = capped.select(keyCols.map(col) :+ col(idCol).as("doc_a") :+ col("sig").as("sig_a"): _*)
-    val r = capped.select(keyCols.map(col) :+ col(idCol).as("doc_b") :+ col("sig").as("sig_b"): _*)
-    l.join(r, keyCols)
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      // filter BEFORE distinct (they commute — hamming is a function of
-      // the pair): non-matching candidates never reach the exchange
+    val blk = blockCols.map(col)
+    val capped = capBuckets(keyedSigs(proxy, maxHamming, blockCols), op,
+      maxBucketSize, blockCols)
+    val l = capped.select(keyCols.map(col) :+ col("sig").as("__siga") :+
+      col("__n").as("__na"): _*)
+    val r = capped.select(keyCols.map(col) :+ col("sig").as("__sigb"): _*)
+    val xor = col("__siga").bitwiseXOR(col("__sigb"))
+    val sigPairs = l.join(r, keyCols)
+      .filter(col("__siga") < col("__sigb") ||
+        (col("__siga") === col("__sigb") && col("__na") > 1))
+      .filter(firstCleanEmission(xor, col("chunk"), maxHamming))
+      .select(blk :+ col("__siga") :+ col("__sigb") :+
+        bit_count(xor).as("hamming"): _*)
       .filter(col("hamming") <= maxHamming)
-      .distinct()
+    // expansion: every (member of sig_a, member of sig_b) combination,
+    // ordered by id — one output row per qualifying pair, none with
+    // doc_a == doc_b (a duplicated id never pairs with itself)
+    val mA = proxy.select(
+      blk :+ col("sig").as("__siga") :+ col(idCol).as("__ida"): _*)
+    val mB = proxy.select(
+      blk :+ col("sig").as("__sigb") :+ col(idCol).as("__idb"): _*)
+    sigPairs
+      .join(mA, blockCols :+ "__siga")
+      .join(mB, blockCols :+ "__sigb")
+      .filter(when(col("__siga") === col("__sigb"), col("__ida") < col("__idb"))
+        .otherwise(col("__ida") =!= col("__idb")))
+      .select(least(col("__ida"), col("__idb")).as("doc_a"),
+        greatest(col("__ida"), col("__idb")).as("doc_b"), col("hamming"))
   }
 
   /** Winnowing fingerprint sketch (Schleimer, Wilkerson & Aiken, SIGMOD'03

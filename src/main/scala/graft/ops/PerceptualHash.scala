@@ -272,11 +272,13 @@ object PerceptualHash {
   }
 
   /** Perceptual near-dup pairs end-to-end: decode → pHash → banded
-    * Hamming LSH join → exact-verified `(doc_a, doc_b, hamming)` with
-    * hamming ≤ maxHamming. Candidate recall at the radius is 100%
-    * (chunk-pair pigeonhole); `maxBucketSize` caps degenerate buckets
-    * (e.g. monochrome images all hashing to 0) with drop observability
-    * via the dedup cap report. */
+    * Hamming LSH join ([[Dedup.signaturePairs]]) → exact-verified
+    * `(doc_a, doc_b, hamming)` with hamming ≤ maxHamming; undecodable
+    * payloads (NULL pHash) pair with nothing. `maxBucketSize` counts
+    * member rows per LSH bucket: with no bucket over it the output is
+    * exactly the brute-force pair set; buckets over it (e.g. monochrome
+    * images all hashing to 0) are dropped and reported via the dedup cap
+    * report, and the output is then a subset of the exact result. */
   def phashPairs(df: DataFrame, maxHamming: Int = 8,
                  maxBucketSize: Int = 1000,
                  idCol: String = "doc_id", mediaCol: String = "media",

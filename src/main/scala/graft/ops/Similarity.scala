@@ -796,20 +796,16 @@ object Similarity {
       .select(col("neighbor_id").as(idCol), col("cv"), col("cell_id"))
       .localCheckpoint(eager = false) // feeds sizes + both self-join sides
     val sizes = assigned.groupBy("cell_id").agg(count(lit(1)).as("bsz"))
-    // same observability policy (and conf flag) as the LSH caps in Dedup:
-    // the eager warn job is skippable for back-to-back benchmarking, the
-    // cap EXCLUSION below always applies
-    if (emb.sparkSession.conf
-        .get("spark.graft.dedup.reportCaps", "true").toBoolean) {
-      val oversized = sizes.filter(col("bsz") > maxClusterSize)
-        .agg(count(lit(1)), coalesce(sum(col("bsz")), lit(0L))).head()
-      if (oversized.getLong(0) > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"graft.semdedup: ${oversized.getLong(0)} cluster(s) over " +
-            s"maxClusterSize=$maxClusterSize excluded from pairing " +
-            s"(${oversized.getLong(1)} vectors lose near-dup recall) — " +
-            "raise nlist (SemDeDup wants ~sqrt(n) clusters) or the cap")
-    }
+    // same observability policy as the LSH caps in Dedup: an eager warn
+    // job measures what the cap EXCLUSION below drops
+    val oversized = sizes.filter(col("bsz") > maxClusterSize)
+      .agg(count(lit(1)), coalesce(sum(col("bsz")), lit(0L))).head()
+    if (oversized.getLong(0) > 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"graft.semdedup: ${oversized.getLong(0)} cluster(s) over " +
+          s"maxClusterSize=$maxClusterSize excluded from pairing " +
+          s"(${oversized.getLong(1)} vectors lose near-dup recall) — " +
+          "raise nlist (SemDeDup wants ~sqrt(n) clusters) or the cap")
     val small = assigned.join(
       broadcast(sizes.filter(col("bsz") <= maxClusterSize).select("cell_id")),
       Seq("cell_id"))

@@ -340,6 +340,25 @@ object MergeWriter {
   def readAsOf(spark: SparkSession, table: LakeTable, commit: Long): DataFrame =
     readViewUpTo(spark, table, commit)
 
+  /** The MOR delta log of `commits` as ONE relation, for every log
+    * reader (snapshot, time travel, compaction, incremental pull).
+    * Commits differ in shape — an upsert carries the payload, a
+    * tombstone-only commit carries the keys and `_graft_deleted` — so the
+    * read merges their schemas; without it Spark takes one file's schema,
+    * and either the payload or the tombstone flag vanishes from the whole
+    * chain. `_graft_deleted` is false on upsert rows. */
+  private def readLog(spark: SparkSession, table: LakeTable,
+                      commits: Seq[Long]): DataFrame = {
+    val logs = spark.read
+      .option("basePath", s"${table.path}/_delta")
+      .option("mergeSchema", "true")
+      .parquet(commits.map(c => s"${table.path}/_delta/commit=$c"): _*)
+    logs.withColumn("_graft_deleted",
+      if (logs.columns.contains("_graft_deleted"))
+        coalesce(col("_graft_deleted"), lit(false))
+      else lit(false))
+  }
+
   /** Snapshot resolution, shaped for 100 TB: conflicts are resolved with a
     * skew-resistant max_by aggregate over the DELTA LOG ONLY (ordered by
     * commit DESC then precombine DESC — a log record always supersedes the
@@ -353,23 +372,16 @@ object MergeWriter {
       return base.getOrElse(spark.emptyDataFrame)
     val commits = listCommits(spark, table).filter(_ <= upTo)
     if (commits.isEmpty) return base.getOrElse(spark.emptyDataFrame)
-    val logs = spark.read
-      .option("basePath", s"${table.path}/_delta")
-      .parquet(commits.map(c => s"${table.path}/_delta/commit=$c"): _*)
+    val logs = readLog(spark, table, commits)
     val schemaCols: Seq[String] =
       base.map(_.columns.toSeq).getOrElse(logs.columns.toSeq.filterNot(
         c => c == "commit" || c == "_graft_deleted"))
-    // normalize logs: align payload columns (pure-tombstone commits carry
-    // only keys), stamp commit + deleted flags
-    val logFlagged = {
-      val l = if (logs.columns.contains("_graft_deleted")) logs
-              else logs.withColumn("_graft_deleted", lit(false))
-      val aligned = schemaCols.foldLeft(l) { (d, c) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-      }
-      aligned.select((schemaCols.map(col) :+ col("commit").as(CommitCol) :+
-        coalesce(col("_graft_deleted"), lit(false)).as("_graft_deleted")): _*)
-    }
+    // align payload columns to the base (a log written before a base
+    // column existed lacks it), stamp the commit
+    val logFlagged = schemaCols.foldLeft(logs) { (d, c) =>
+      if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
+    }.select((schemaCols.map(col) :+ col("commit").as(CommitCol) :+
+      col("_graft_deleted")): _*)
     val keys = table.recordKeyFields
     // same skew-resistant max_by aggregation as dedupByPrecombine, ordered
     // by (commit DESC, precombine DESC, tie-breaks) — delta rows only
@@ -408,28 +420,17 @@ object MergeWriter {
     if (table.tableType == LakeTable.MergeOnRead) {
       val commits = listCommits(spark, table).filter(_ > sinceCommit)
       if (commits.isEmpty) return spark.emptyDataFrame
-      val logs = spark.read
-        .option("basePath", s"${table.path}/_delta")
-        // commits can differ in shape (tombstone-only, evolved schema)
-        .option("mergeSchema", "true")
-        .parquet(commits.map(c => s"${table.path}/_delta/commit=$c"): _*)
+      val logs = readLog(spark, table, commits)
       val schemaCols: Seq[String] = logs.columns.toSeq.filterNot(c =>
         c == "commit" || c == "_graft_deleted" ||
           c == CommitTimeCol || c == RecordKeyCol)
-      val withDel =
-        if (logs.columns.contains("_graft_deleted")) logs
-        else logs.withColumn("_graft_deleted", lit(false))
-      val aligned = schemaCols.foldLeft(withDel) { (d, c) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-      }
       val keys = table.recordKeyFields
       val ordKey = struct(
         (col("commit") +: col(table.precombineField) +:
           schemaCols.filterNot(keys.contains).map(c => col(c).cast("string"))): _*)
       val payload = struct((schemaCols.map(col) :+
-        coalesce(col("_graft_deleted"), lit(false)).as("_del") :+
-        col("commit").as("_c")): _*)
-      aligned.groupBy(keys.map(col): _*)
+        col("_graft_deleted").as("_del") :+ col("commit").as("_c")): _*)
+      logs.groupBy(keys.map(col): _*)
         .agg(max_by(payload, ordKey).as("_r"))
         .filter(!col("_r._del"))
         .select(schemaCols.map(c => col(s"_r.$c").as(c)) :+

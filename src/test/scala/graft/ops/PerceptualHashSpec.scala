@@ -203,57 +203,128 @@ class PerceptualHashSpec extends SparkSuite {
     val p2 = Dedup.signaturePairs(withNulls, maxHamming = 2,
       maxBucketSize = 10).collect()
     assert(p2.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 3L)))
+    // NULL ids are excluded too, and no doc pairs with itself: id 1 is
+    // duplicated, once with the same signature as its copy and once with
+    // a signature 1 bit away
+    val idSchema = new org.apache.spark.sql.types.StructType()
+      .add("doc_id", org.apache.spark.sql.types.LongType)
+      .add("sig", org.apache.spark.sql.types.LongType)
+    val dupIds = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row(null, java.lang.Long.valueOf(5L)),
+        org.apache.spark.sql.Row(1L, java.lang.Long.valueOf(5L)),
+        org.apache.spark.sql.Row(1L, java.lang.Long.valueOf(5L)),
+        org.apache.spark.sql.Row(1L, java.lang.Long.valueOf(7L)),
+        org.apache.spark.sql.Row(3L, java.lang.Long.valueOf(5L)))), idSchema)
+    for (cap <- Seq(10, 1000000)) {
+      val p3 = Dedup.signaturePairs(dupIds, maxHamming = 2,
+        maxBucketSize = cap).collect()
+      assert(p3.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+        r.getLong(0) != r.getLong(1)), s"self or NULL pair at cap=$cap")
+      assert(p3.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 3L)))
+      val inc = Dedup.signaturePairsIncremental(dupIds, dupIds.filter(
+        col("doc_id").isNull || col("sig") === 7L), maxHamming = 2,
+        maxBucketSize = cap).collect()
+      assert(inc.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      assert(inc.map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        Set((1L, 1L), (1L, 3L)))
+    }
+    // the text route drops NULL ids and NULL texts the same way
+    val text = "the same exact boilerplate text repeated here"
+    val docs = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row(null, text),
+        org.apache.spark.sql.Row(1L, text),
+        org.apache.spark.sql.Row(2L, text),
+        org.apache.spark.sql.Row(3L, null))),
+      new org.apache.spark.sql.types.StructType()
+        .add("doc_id", org.apache.spark.sql.types.LongType)
+        .add("text", org.apache.spark.sql.types.StringType))
+    for (cap <- Seq(10, 1000000))
+      assert(Dedup.simhashPairs(docs, 3, maxBucketSize = cap)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ===
+        Set((1L, 2L)), s"simhashPairs cap=$cap")
   }
 
-  test("signaturePairs first-clean single emission == distinct path == brute force") {
-    // Twinned corpus: 40 bases, three perturbed copies each (bit flips at
-    // deterministic positions) — pairs collide in MANY chunk-pair buckets,
-    // so this exercises exactly the multiplicity the first-clean filter
-    // (cap >= 10^6 path) must collapse to one emission per pair.
-    val rows = (0 until 40).flatMap { i =>
-      val base = 0x9E3779B97F4A7C15L * (i + 1)
-      Seq((i * 3L, base),
-        (i * 3L + 1, base ^ (1L << (i % 64))),
-        (i * 3L + 2, base ^ (1L << ((i * 7 + 3) % 64)) ^ (1L << ((i * 13 + 1) % 64))))
-    }
-    val df = rows.toDF("doc_id", "sig")
-    // h=40 → 42 chunks: chunk indices past 31 pin the LONG bitmask fix
-    // (Int shift counts are masked to 5 bits, so Int masks would alias
-    // chunk bits and silently emit wrong/duplicate pairs)
-    for (h <- Seq(2, 6, 8, 40)) {
-      val fast = Dedup.signaturePairs(df, maxHamming = h,
-        maxBucketSize = 1000000)
-        .select("doc_a", "doc_b", "hamming")
-        .as[(Long, Long, Int)].collect()
-      // exactly one row per pair — the single-emission contract
-      assert(fast.length === fast.map(t => (t._1, t._2)).distinct.length)
-      val capped = Dedup.signaturePairs(df, maxHamming = h,
-        maxBucketSize = 999999) // below the floor: distinct() path
-        .select("doc_a", "doc_b", "hamming")
-        .as[(Long, Long, Int)].collect()
-      val brute = df.as("a").crossJoin(df.as("b"))
-        .filter(col("a.doc_id") < col("b.doc_id") &&
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= h)
-        .select(col("a.doc_id"), col("b.doc_id"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int"))
-        .as[(Long, Long, Int)].collect().toSet
-      assert(fast.toSet === brute, s"first-clean vs brute maxHamming=$h")
-      assert(capped.toSet === brute, s"distinct vs brute maxHamming=$h")
-    }
-    // incremental twin: batch-vs-corpus, same single-emission contract
-    val corpus = df
+  /** Twinned corpus: 40 bases, three perturbed copies each (bit flips at
+    * deterministic positions) — pairs collide in MANY chunk-pair buckets,
+    * so this exercises the multiplicity the first-clean filter must
+    * collapse to one emission per pair. */
+  private def twinned: Seq[(Long, Long)] = (0 until 40).flatMap { i =>
+    val base = 0x9E3779B97F4A7C15L * (i + 1)
+    Seq((i * 3L, base),
+      (i * 3L + 1, base ^ (1L << (i % 64))),
+      (i * 3L + 2, base ^ (1L << ((i * 7 + 3) % 64)) ^ (1L << ((i * 13 + 1) % 64))))
+  }
+
+  /** Every pair of `a` x `b` rows within `h` bits, by cross join. */
+  private def brute(a: org.apache.spark.sql.DataFrame,
+                    b: org.apache.spark.sql.DataFrame, h: Int,
+                    selfJoin: Boolean): Set[(Long, Long, Int)] =
+    a.as("a").crossJoin(b.as("b"))
+      .filter((if (selfJoin) col("a.doc_id") < col("b.doc_id") else lit(true)) &&
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= h)
+      .select(col("a.doc_id"), col("b.doc_id"),
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast("int"))
+      .as[(Long, Long, Int)].collect().toSet
+
+  test("batch + incremental Hamming pairs == brute force at cap 1000 and 10^6") {
+    val df = twinned.toDF("doc_id", "sig")
     val batch = df.filter(col("doc_id") % 3 === 0)
       .select((col("doc_id") + 1000L).as("doc_id"),
         col("sig").bitwiseXOR(lit(1L)).as("sig"))
-    val incFast = Dedup.signaturePairsIncremental(corpus, batch,
-      maxHamming = 6, maxBucketSize = 1000000)
-      .select("batch_id", "corpus_id", "hamming")
-      .as[(Long, Long, Int)].collect()
-    assert(incFast.length === incFast.map(t => (t._1, t._2)).distinct.length)
-    val incSlow = Dedup.signaturePairsIncremental(corpus, batch,
-      maxHamming = 6, maxBucketSize = 999999)
-      .select("batch_id", "corpus_id", "hamming")
-      .as[(Long, Long, Int)].collect()
-    assert(incFast.toSet === incSlow.toSet)
+    // h=40 → 42 chunks: chunk indices past 31 pin the LONG bitmask fix
+    // (Int shift counts are masked to 5 bits, so Int masks would alias
+    // chunk bits and silently emit wrong/duplicate pairs)
+    for (h <- Seq(2, 6, 8, 40); cap <- Seq(1000, 1000000)) {
+      val got = Dedup.signaturePairs(df, maxHamming = h, maxBucketSize = cap)
+        .select("doc_a", "doc_b", "hamming")
+        .as[(Long, Long, Int)].collect()
+      // exactly one row per pair — the single-emission contract
+      assert(got.length === got.map(t => (t._1, t._2)).distinct.length)
+      assert(got.toSet === brute(df, df, h, selfJoin = true),
+        s"batch maxHamming=$h cap=$cap")
+      val inc = Dedup.signaturePairsIncremental(df, batch, maxHamming = h,
+        maxBucketSize = cap)
+        .select("batch_id", "corpus_id", "hamming")
+        .as[(Long, Long, Int)].collect()
+      assert(inc.length === inc.map(t => (t._1, t._2)).distinct.length)
+      assert(inc.toSet === brute(batch, df, h, selfJoin = false),
+        s"incremental maxHamming=$h cap=$cap")
+    }
+  }
+
+  test("capped buckets: a subset of brute force, counted in member rows") {
+    // a 30-member group of one signature beside the twinned corpus: every
+    // bucket holding it has 30 member rows (but ONE distinct signature)
+    val hotSig = 0x0123456789ABCDEFL
+    val df = (twinned ++ (0 until 30).map(i => (5000L + i, hotSig)))
+      .toDF("doc_id", "sig")
+    val h = 6
+    val nKeys = (h + 2) * (h + 1) / 2 // chunk-pair buckets per signature
+    val got = Dedup.signaturePairs(df, maxHamming = h, maxBucketSize = 10)
+      .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    val m = Dedup.capReports.get("signature")
+    assert(m.cappedBuckets === nKeys.toLong && m.droppedRows === 30L * nKeys,
+      s"the hot group's buckets are capped, counted in member rows: $m")
+    val all = brute(df, df, h, selfJoin = true)
+    assert(all.count(_._1 >= 5000L) === 30 * 29 / 2)
+    assert(got.subsetOf(all))
+    assert(!got.exists(_._2 >= 5000L), "a group over the cap yields no pairs")
+    assert(got === all.filter(_._2 < 5000L), "uncapped buckets keep every pair")
+    // incremental: the same cap on the corpus side
+    val batch = Seq((9000L, hotSig), (9001L, twinned.head._2 ^ 1L))
+      .toDF("doc_id", "sig")
+    val inc = Dedup.signaturePairsIncremental(df, batch, maxHamming = h,
+      maxBucketSize = 10)
+      .select("batch_id", "corpus_id", "hamming").as[(Long, Long, Int)]
+      .collect().toSet
+    val mi = Dedup.capReports.get("signature-incremental")
+    assert(mi.cappedBuckets === nKeys.toLong && mi.droppedRows === 30L * nKeys)
+    val incAll = brute(batch, df, h, selfJoin = false)
+    assert(incAll.count(_._2 >= 5000L) === 30)
+    assert(inc.subsetOf(incAll))
+    assert(!inc.exists(_._2 >= 5000L), "a group over the cap yields no pairs")
+    assert(inc === incAll.filter(_._2 < 5000L) && inc.nonEmpty)
   }
 }

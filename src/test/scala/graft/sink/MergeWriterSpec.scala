@@ -130,6 +130,27 @@ class MergeWriterSpec extends SparkSuite {
     assert(readAll(t) === Set((2L, "b", 1L, "p")))
   }
 
+  test("MOR: an upsert commit and a tombstone commit share the log chain") {
+    // the two commits differ in shape (payload vs keys + _graft_deleted):
+    // every log reader must see both, or deleted keys come back
+    val t = LakeTable(tmp(), "t", Seq("id"), "ver", Nil, LakeTable.MergeOnRead)
+    MergeWriter.append(batch((1, "a", 1, "p"), (2, "b", 1, "p"),
+      (3, "c", 1, "p")), t)                                          // commit 1
+    MergeWriter.upsert(spark, batch((2, "b2", 2, "p"), (4, "d", 1, "p")), t) // 2
+    MergeWriter.delete(spark, batch((1, "a", 1, "p"), (4, "d", 1, "p")), t)  // 3
+    def ids(df: DataFrame): Set[Long] = df.select("id").as[Long].collect().toSet
+    assert(ids(MergeWriter.readAsOf(spark, t, 2L)) === Set(1L, 2L, 3L, 4L),
+      "readAsOf before the delete")
+    // all three readers checked before asserting, so a failure names each
+    val live = Set(2L, 3L)
+    val seen = Seq(
+      "readView" -> ids(MergeWriter.readView(spark, t)),
+      "readAsOf" -> ids(MergeWriter.readAsOf(spark, t, 3L)),
+      "compact" -> { MergeWriter.compact(spark, t); ids(MergeWriter.readView(spark, t)) })
+    assert(seen === Seq("readView" -> live, "readAsOf" -> live, "compact" -> live))
+    assert(readAll(t) === Set((2L, "b2", 2L, "p"), (3L, "c", 1L, "p")))
+  }
+
   test("later commit wins over higher precombine from an earlier commit") {
     // OverwriteWithLatestAvroPayload semantics: incoming replaces stored,
     // even if the stored precombine is higher
