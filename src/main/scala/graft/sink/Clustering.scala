@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Clustering table service — the analog of Hudi's clustering
@@ -84,14 +84,6 @@ object Clustering {
     val clustered = base
       .repartitionByRange(numFiles, sortKey: _*)
       .sortWithinPartitions(sortKey: _*)
-      // lineage barrier: we overwrite the files we just read
-      .localCheckpoint(true)
-    val w = clustered.write
-    val writer =
-      if (table.isPartitioned)
-        w.partitionBy(table.partitionFields: _*)
-          .option("partitionOverwriteMode", "dynamic")
-      else w
-    writer.mode(SaveMode.Overwrite).parquet(s"${table.path}/data")
+    MergeWriter.rewrite(spark, table, clustered, whole = true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** W1 — Hudi-equivalent keyed merge semantics over partitioned parquet
@@ -16,25 +16,28 @@ import org.apache.spark.sql.functions._
   *  - an incoming record REPLACES the stored record with the same key
   *    (no cross-batch precombine comparison — last write wins, exactly the
   *    reference's observable behavior);
-  *  - `delete` operation removes keys; `insert`/`bulk_insert` append without
-  *    merging (bulk_insert is the reference's high-throughput path,
-  *    hudi_mongodb_batch.properties:15-16).
+  *  - ONE keyed commit per batch: [[applyChanges]] lands a batch's upserts
+  *    and deletes under one commit marker ([[upsert]] and [[delete]] are
+  *    its one-sided calls); a key on both sides keeps its upsert; a
+  *    partition left without rows by deletes disappears;
+  *  - `insert`/`bulk_insert` append without merging (bulk_insert is the
+  *    reference's high-throughput path, hudi_mongodb_batch.properties:15-16).
   *
   * Scale design (100 TB):
-  *  - COPY_ON_WRITE upsert only touches AFFECTED partitions: the batch's
-  *    partition values are collected (small — distinct partition tuples, not
-  *    rows), the existing table is read partition-pruned to those values, and
-  *    the merged result is written with dynamic partition overwrite
-  *    (`spark.sql.sources.partitionOverwriteMode=dynamic`) so untouched
-  *    partitions are never rewritten or even scanned.
-  *  - MERGE_ON_READ appends the batch as a commit-stamped delta log under
-  *    `_delta/commit=N/`; `readView` resolves key conflicts at read time by
-  *    (commit DESC, precombine DESC); `compact()` folds logs into the base.
-  *    Write amplification is O(batch), not O(table).
+  *  - a COPY_ON_WRITE commit without deletes reads and rewrites only the
+  *    batch's partitions (plan-time pruned read, dynamic partition
+  *    overwrite); delete keys carry no partition, so a commit with deletes
+  *    rewrites the whole table;
+  *  - MERGE_ON_READ appends the batch as ONE delta log `_delta/commit=N/`
+  *    (payload rows and `_graft_deleted` tombstones together); `readView`
+  *    resolves key conflicts at read time by (commit DESC, payload above
+  *    tombstone, precombine DESC); `compact()` folds logs into the base.
+  *    Write amplification is O(batch), not O(table);
   *  - the only shuffles are the unavoidable hash-partition on the record key
   *    for dedup and the final partition-path clustering before write;
-  *    a lineage barrier (localCheckpoint — on a real cluster a reliable
-  *    checkpoint / staging dir) lets us overwrite a path we just read.
+  *    every table rewrite goes through one [[rewrite]], whose lineage
+  *    barrier (localCheckpoint — on a real cluster a reliable checkpoint /
+  *    staging dir) lets us overwrite a path we just read.
   */
 object MergeWriter {
 
@@ -44,7 +47,8 @@ object MergeWriter {
   val BulkInsert = "bulk_insert"
   val Delete = "delete"
 
-  private val CommitCol = "_graft_commit"
+  /** Tombstone flag of a MOR delta-log row (true = the key is deleted). */
+  private val DeletedCol = "_graft_deleted"
 
   /** Hudi-style per-record meta columns (`_hoodie_commit_time` /
     * `_hoodie_record_key` analogs, cf. `hoodie.populate.meta.fields`),
@@ -55,28 +59,28 @@ object MergeWriter {
 
   // ---------------------------------------------------------------- dedup
 
-  /** Resolve intra-batch duplicates: keep the row with max precombine per key.
-    * Ties broken deterministically by the stringified remaining columns so the
-    * result is stable across retries/partitionings (Hudi leaves ties
-    * unspecified; determinism is required by our oracle).
-    *
-    * Implemented as `max_by` over an orderable (precombine, tie-break…)
-    * struct rather than a row_number window: a hash aggregate gets map-side
-    * partial combine, so a hot key reduces ONE pre-combined row per input
-    * partition instead of sorting every duplicate in a single window task —
-    * the difference between O(dups) on one executor and O(partitions) at
-    * 100 TB skew. */
-  def dedupByPrecombine(df: DataFrame, keys: Seq[String], precombine: String): DataFrame = {
-    val others = df.columns.filterNot(keys.contains).toSeq
-    // field-lexicographic struct ordering == the old (precombine DESC,
-    // others-as-string DESC) sort; including every column makes ties
-    // identical rows, so max_by's tie choice is immaterial
-    val ordKey = struct((col(precombine) +: others.map(c => col(c).cast("string"))): _*)
-    val payload = struct(df.columns.toIndexedSeq.map(col): _*)
+  /** The latest row of `df` per key by the lexicographic `order`, with
+    * `df`'s columns. A `max_by` aggregate, not a row_number window: its
+    * map-side partial combine reduces a hot key to ONE row per input
+    * partition instead of sorting every duplicate in one window task. */
+  private[graft] def latestByKey(df: DataFrame, keys: Seq[String],
+                                 order: Seq[Column]): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(max_by(payload, ordKey).as("_r"))
+      .agg(max_by(struct(df.columns.toIndexedSeq.map(col): _*),
+        struct(order: _*)).as("_r"))
       .select(col("_r.*"))
-  }
+
+  /** Max precombine, then the stringified `others`: tied rows are then
+    * identical, so the winner is deterministic across retries (Hudi leaves
+    * ties unspecified; our oracle needs determinism). */
+  private def precombineOrder(precombine: String, others: Seq[String]): Seq[Column] =
+    col(precombine) +: others.map(c => col(c).cast("string"))
+
+  /** Resolve intra-batch duplicates: keep the row with max precombine per
+    * key, ties broken by the remaining columns (see [[precombineOrder]]). */
+  def dedupByPrecombine(df: DataFrame, keys: Seq[String], precombine: String): DataFrame =
+    latestByKey(df, keys,
+      precombineOrder(precombine, df.columns.filterNot(keys.contains).toSeq))
 
   /** Pure merge of a (already deduped) batch into existing rows:
     * incoming replaces stored on key match; stored rows with unmatched keys
@@ -120,15 +124,105 @@ object MergeWriter {
     writeCommitMarker(spark, table, commit)
   }
 
-  def upsert(spark: SparkSession, batch: DataFrame, table: LakeTable): Unit = {
-    val deduped = dedupByPrecombine(batch, table.recordKeyFields, table.precombineField)
+  /** upsert: [[applyChanges]] with no deletes — one keyed commit whose
+    * rows (deduped by precombine) replace the stored rows with their keys. */
+  def upsert(spark: SparkSession, batch: DataFrame, table: LakeTable): Unit =
+    applyChanges(spark, table, Some(batch), None)
+
+  /** delete: [[applyChanges]] with no upserts — one keyed commit dropping
+    * the keys of `batch`; a partition left without rows disappears. */
+  def delete(spark: SparkSession, batch: DataFrame, table: LakeTable): Unit =
+    applyChanges(spark, table, None, Some(batch))
+
+  /** Apply one batch as ONE keyed commit (one write, one marker) from
+    * `upserts` (deduped by precombine; each replaces the stored row with
+    * its key) and `deletes` (only their key columns are read); either side
+    * may be absent, not both. A key on both sides keeps its upsert; a
+    * partition left without rows disappears. MOR writes one delta commit
+    * of payload rows and tombstones; COW anti-joins the base on all the
+    * batch's keys, unions the upserts and rewrites once (see the object
+    * doc for which partitions). So a crash cannot leave a batch's upserts
+    * applied without its deletes. */
+  def applyChanges(spark: SparkSession, table: LakeTable,
+                   upserts: Option[DataFrame], deletes: Option[DataFrame]): Unit = {
+    require(upserts.isDefined || deletes.isDefined,
+      "applyChanges needs upserts, deletes or both")
+    val keys = table.recordKeyFields
     val commit = nextCommit(spark, table)
-    val stamped = stampMeta(deduped, table, commit)
+    val ups = upserts.map(b =>
+      stampMeta(dedupByPrecombine(b, keys, table.precombineField), table, commit))
+    val delKeys = deletes.map(_.select(keys.map(col): _*))
     if (table.tableType == LakeTable.MergeOnRead) {
-      stamped.write.mode(SaveMode.Overwrite)
+      // payload rows carry a null flag, which readLog reads as false
+      val tombstones = delKeys.map(_.withColumn(DeletedCol, lit(true)))
+      (ups ++ tombstones).reduce(_.unionByName(_, allowMissingColumns = true))
+        .write.mode(SaveMode.Overwrite)
         .parquet(s"${table.path}/_delta/commit=$commit")
-    } else cowRewrite(spark, stamped, table, isDelete = false)
+    } else cowCommit(spark, table, ups, delKeys)
     writeCommitMarker(spark, table, commit)
+  }
+
+  /** COW side of [[applyChanges]]: one anti-join of the base on every key
+    * of the batch, one union with the upserts, one rewrite. */
+  private def cowCommit(spark: SparkSession, table: LakeTable,
+                        ups: Option[DataFrame], delKeys: Option[DataFrame]): Unit =
+    readBase(spark, table) match {
+      case None =>
+        ups.foreach(partitionedWriter(_, table)
+          .mode(SaveMode.Overwrite).parquet(dataPath(table)))
+      case Some(existing) =>
+        val keys = table.recordKeyFields
+        // without deletes `ups` is defined (applyChanges requires a side)
+        val scope = if (delKeys.isEmpty && table.isPartitioned)
+          affectedPartitions(existing, ups.get, table) else existing
+        val batchKeys = (ups.map(_.select(keys.map(col): _*)) ++ delKeys).reduce(_ union _)
+        val survivors = scope.join(batchKeys, keys, "left_anti")
+        rewrite(spark, table,
+          ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true)),
+          whole = delKeys.isDefined)
+    }
+
+  /** The rows of `existing` in the partitions `batch` touches. Its distinct
+    * partition tuples are small; as a STATIC disjunction they prune at scan
+    * PLANNING time, where a runtime semi join would scan the whole table.
+    * Above the cap (near-unpartitioned layouts) the broadcast semi join is
+    * the safer plan. */
+  private def affectedPartitions(existing: DataFrame, batch: DataFrame,
+                                 table: LakeTable): DataFrame = {
+    val parts = batch.select(table.partitionFields.map(col): _*).distinct()
+    val partRows = parts.limit(1001).collect()
+    if (partRows.length <= 1000) {
+      val cond = partRows.iterator.map { r =>
+        table.partitionFields.zipWithIndex
+          .map { case (f, i) => col(f) <=> lit(r.get(i)) }
+          .reduce(_ && _)
+      }.reduceOption(_ || _).getOrElse(lit(false))
+      existing.where(cond)
+    } else existing.join(broadcast(parts), table.partitionFields, "left_semi")
+  }
+
+  /** The one table rewrite (COW commits, compaction, clustering): `df`,
+    * materialized first as a lineage barrier, replaces the partitions it
+    * holds rows for — or with `whole` the entire table. The dynamic
+    * overwrite swaps in each partition that received rows at job commit;
+    * one that received none keeps its old files, so with `whole` those
+    * partitions are deleted after the job commits (the data directory too
+    * when none is left), before the caller writes its commit marker. */
+  private[sink] def rewrite(spark: SparkSession, table: LakeTable, df: DataFrame,
+                            whole: Boolean): Unit = {
+    val before = if (whole && table.isPartitioned) dataFiles(spark, table) else Set.empty[String]
+    partitionedWriter(df.localCheckpoint(true), table)
+      .mode(SaveMode.Overwrite).parquet(dataPath(table))
+    if (before.nonEmpty) {
+      // an old file that survived the swap lies in a partition df left empty
+      val after = dataFiles(spark, table)
+      val stale = after.intersect(before)
+      val root = new org.apache.hadoop.fs.Path(dataPath(table))
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (stale == after) fs.delete(root, true)
+      else stale.map(f => new org.apache.hadoop.fs.Path(f).getParent)
+        .foreach(fs.delete(_, true))
+    }
   }
 
   /** File-slice COW upsert — the Hudi BLOOM-index write path
@@ -170,18 +264,15 @@ object MergeWriter {
     val commit = nextCommit(spark, table)
     val stamped = stampMeta(deduped, table, commit)
     val before = dataFiles(spark, table)
-    if (touched.isEmpty) {
-      partitionedWriter(stamped, table).mode(SaveMode.Append).parquet(dataPath(table))
-    } else {
-      val touchedDf = spark.read.option("basePath", dataPath(table)).parquet(touched: _*)
-      val merged = mergeBatch(touchedDf, stamped, table.recordKeyFields)
-      // append reads the touched files while writing NEW part files — no
-      // input is overwritten, so no lineage barrier is needed here
-      partitionedWriter(merged, table).mode(SaveMode.Append).parquet(dataPath(table))
-      val fs = new org.apache.hadoop.fs.Path(dataPath(table))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    }
+    val slices = if (touched.isEmpty) stamped else mergeBatch(
+      spark.read.option("basePath", dataPath(table)).parquet(touched: _*),
+      stamped, table.recordKeyFields)
+    // append reads the touched files while writing NEW part files — no
+    // input is overwritten, so no lineage barrier is needed here
+    partitionedWriter(slices, table).mode(SaveMode.Append).parquet(dataPath(table))
+    val fs = new org.apache.hadoop.fs.Path(dataPath(table))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    touched.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
     writeCommitMarker(spark, table, commit)
     val added = (dataFiles(spark, table) -- before).toSeq
     BloomIndex.maintain(spark, table, added, touched, expectedKeysPerFile, fpp)
@@ -203,69 +294,6 @@ object MergeWriter {
       }
       out.result()
     }
-  }
-
-  /** delete: drop the batch's keys from the table. */
-  def delete(spark: SparkSession, batch: DataFrame, table: LakeTable): Unit = {
-    val keysDf = batch.select(table.recordKeyFields.map(col): _*).distinct()
-    val commit = nextCommit(spark, table)
-    if (table.tableType == LakeTable.MergeOnRead) {
-      // tombstone log entry: null payload marker column
-      keysDf.withColumn("_graft_deleted", lit(true))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${table.path}/_delta/commit=$commit")
-    } else {
-      readBase(spark, table) match {
-        case Some(e) =>
-          val remaining = e.join(keysDf, table.recordKeyFields, "left_anti")
-          overwriteAll(spark, remaining, table)
-        case None => ()
-      }
-    }
-    writeCommitMarker(spark, table, commit)
-  }
-
-  /** COW: read ONLY affected partitions of the existing table, merge, rewrite
-    * ONLY those partitions (dynamic partition overwrite). */
-  private def cowRewrite(spark: SparkSession, deduped: DataFrame,
-                         table: LakeTable, isDelete: Boolean): Unit = {
-    readBase(spark, table) match {
-      case None =>
-        partitionedWriter(deduped, table)
-          .mode(SaveMode.Overwrite).parquet(dataPath(table))
-      case Some(existing) if table.isPartitioned =>
-        // distinct partition tuples of the batch — small, collectable.
-        // As a STATIC disjunction they prune at scan PLANNING time (the
-        // read touches only affected partition directories); a runtime
-        // semi join would scan the whole table to filter it. Above the
-        // cap (degenerate near-unpartitioned layouts) the broadcast
-        // semi join is the safer plan.
-        val parts = deduped.select(table.partitionFields.map(col): _*).distinct()
-        val partRows = parts.limit(1001).collect()
-        val affected =
-          if (partRows.length <= 1000) {
-            val cond = partRows.iterator.map { r =>
-              table.partitionFields.zipWithIndex
-                .map { case (f, i) => col(f) <=> lit(r.get(i)) }
-                .reduce(_ && _)
-            }.reduceOption(_ || _).getOrElse(lit(false))
-            existing.where(cond)
-          } else existing.join(broadcast(parts), table.partitionFields, "left_semi")
-        val merged = mergeBatch(affected, deduped, table.recordKeyFields)
-        // lineage barrier: we overwrite partitions we just read
-        val materialized = merged.localCheckpoint(true)
-        partitionedWriter(materialized, table)
-          .mode(SaveMode.Overwrite).parquet(dataPath(table))
-      case Some(existing) =>
-        val merged = mergeBatch(existing, deduped, table.recordKeyFields)
-        overwriteAll(spark, merged, table)
-    }
-  }
-
-  private def overwriteAll(spark: SparkSession, df: DataFrame, table: LakeTable): Unit = {
-    val materialized = df.localCheckpoint(true)
-    partitionedWriter(materialized, table)
-      .mode(SaveMode.Overwrite).parquet(dataPath(table))
   }
 
   private def partitionedWriter(df: DataFrame, table: LakeTable) = {
@@ -326,9 +354,8 @@ object MergeWriter {
   private def nextCommit(spark: SparkSession, table: LakeTable): Long =
     latestCommit(spark, table) + 1L
 
-  /** Snapshot view: base ∪ delta logs with key conflicts resolved by
-    * (commit DESC, precombine DESC) and tombstones applied. For COW tables
-    * this is just the base. */
+  /** Snapshot view: base ∪ delta logs with key conflicts resolved in
+    * [[logOrder]] and tombstones applied. For COW tables this is the base. */
   def readView(spark: SparkSession, table: LakeTable): DataFrame =
     readViewUpTo(spark, table, Long.MaxValue)
 
@@ -340,32 +367,37 @@ object MergeWriter {
   def readAsOf(spark: SparkSession, table: LakeTable, commit: Long): DataFrame =
     readViewUpTo(spark, table, commit)
 
-  /** The MOR delta log of `commits` as ONE relation, for every log
-    * reader (snapshot, time travel, compaction, incremental pull).
-    * Commits differ in shape — an upsert carries the payload, a
-    * tombstone-only commit carries the keys and `_graft_deleted` — so the
-    * read merges their schemas; without it Spark takes one file's schema,
-    * and either the payload or the tombstone flag vanishes from the whole
-    * chain. `_graft_deleted` is false on upsert rows. */
+  /** The MOR delta log of `commits` as ONE relation, for every log reader.
+    * A tombstone-only commit carries just the keys and `_graft_deleted`,
+    * so the read merges schemas — else Spark takes one file's schema and
+    * the payload or the flag vanishes from the whole chain.
+    * `_graft_deleted` is false on payload rows. */
   private def readLog(spark: SparkSession, table: LakeTable,
                       commits: Seq[Long]): DataFrame = {
     val logs = spark.read
       .option("basePath", s"${table.path}/_delta")
       .option("mergeSchema", "true")
       .parquet(commits.map(c => s"${table.path}/_delta/commit=$c"): _*)
-    logs.withColumn("_graft_deleted",
-      if (logs.columns.contains("_graft_deleted"))
-        coalesce(col("_graft_deleted"), lit(false))
+    logs.withColumn(DeletedCol,
+      if (logs.columns.contains(DeletedCol)) coalesce(col(DeletedCol), lit(false))
       else lit(false))
   }
 
-  /** Snapshot resolution, shaped for 100 TB: conflicts are resolved with a
-    * skew-resistant max_by aggregate over the DELTA LOG ONLY (ordered by
-    * commit DESC then precombine DESC — a log record always supersedes the
-    * base, so the base never needs to enter the shuffle), and base rows
-    * merely anti-join the distinct delta keys (broadcastable while the
-    * uncompacted log is small — exactly the window Hudi keeps MOR logs in).
-    * Read cost is O(base scan) + O(delta shuffle), not O(table shuffle). */
+  /** Election order of delta-log rows: later commit first; within one
+    * commit a payload row above a tombstone, so an upsert wins a key the
+    * same commit also deletes; then precombine and the stringified
+    * payload as tie-breaks. */
+  private def logOrder(table: LakeTable, payloadCols: Seq[String]): Seq[Column] =
+    col("commit") +: not(col(DeletedCol)) +: precombineOrder(table.precombineField,
+      payloadCols.filterNot(table.recordKeyFields.contains))
+
+  /** Snapshot resolution, shaped for 100 TB: conflicts are resolved with
+    * [[latestByKey]] over the DELTA LOG ONLY (in [[logOrder]] — a log
+    * record always supersedes the base, so the base never needs to enter
+    * the shuffle), and base rows merely anti-join the distinct delta keys
+    * (broadcastable while the uncompacted log is small — exactly the
+    * window Hudi keeps MOR logs in). Read cost is O(base scan) + O(delta
+    * shuffle), not O(table shuffle). */
   private def readViewUpTo(spark: SparkSession, table: LakeTable, upTo: Long): DataFrame = {
     val base = readBase(spark, table)
     if (table.tableType != LakeTable.MergeOnRead)
@@ -375,33 +407,23 @@ object MergeWriter {
     val logs = readLog(spark, table, commits)
     val schemaCols: Seq[String] =
       base.map(_.columns.toSeq).getOrElse(logs.columns.toSeq.filterNot(
-        c => c == "commit" || c == "_graft_deleted"))
+        c => c == "commit" || c == DeletedCol))
     // align payload columns to the base (a log written before a base
-    // column existed lacks it), stamp the commit
-    val logFlagged = schemaCols.foldLeft(logs) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-    }.select((schemaCols.map(col) :+ col("commit").as(CommitCol) :+
-      col("_graft_deleted")): _*)
+    // column existed lacks it)
+    val aligned = logs.select(schemaCols.map(c =>
+      if (logs.columns.contains(c)) col(c) else lit(null).as(c)) :+
+      col("commit") :+ col(DeletedCol): _*)
     val keys = table.recordKeyFields
-    // same skew-resistant max_by aggregation as dedupByPrecombine, ordered
-    // by (commit DESC, precombine DESC, tie-breaks) — delta rows only
-    val ordKey = struct(
-      (col(CommitCol) +: col(table.precombineField) +:
-        schemaCols.filterNot(keys.contains).map(c => col(c).cast("string"))): _*)
-    val payload = struct((schemaCols.map(col) :+ col("_graft_deleted")): _*)
-    val deltaLatest = logFlagged.groupBy(keys.map(col): _*)
-      .agg(max_by(payload, ordKey).as("_r"))
-    val deltaAlive = deltaLatest
-      .filter(!col("_r._graft_deleted"))
-      .select(schemaCols.map(c => col(s"_r.$c").as(c)): _*)
+    val deltaLatest = latestByKey(aligned, keys, logOrder(table, schemaCols))
+    val deltaAlive = deltaLatest.filter(!col(DeletedCol))
+      .select(schemaCols.map(col): _*)
     base match {
       case None => deltaAlive
       case Some(b) =>
         // base survives only where the delta has no record for the key
         // (alive OR tombstoned — either way the log owns that key now)
-        val deltaKeys = deltaLatest.select(keys.map(col): _*)
         b.select(schemaCols.map(col): _*)
-          .join(deltaKeys, keys, "left_anti")
+          .join(deltaLatest.select(keys.map(col): _*), keys, "left_anti")
           .unionByName(deltaAlive)
     }
   }
@@ -422,19 +444,10 @@ object MergeWriter {
       if (commits.isEmpty) return spark.emptyDataFrame
       val logs = readLog(spark, table, commits)
       val schemaCols: Seq[String] = logs.columns.toSeq.filterNot(c =>
-        c == "commit" || c == "_graft_deleted" ||
-          c == CommitTimeCol || c == RecordKeyCol)
-      val keys = table.recordKeyFields
-      val ordKey = struct(
-        (col("commit") +: col(table.precombineField) +:
-          schemaCols.filterNot(keys.contains).map(c => col(c).cast("string"))): _*)
-      val payload = struct((schemaCols.map(col) :+
-        col("_graft_deleted").as("_del") :+ col("commit").as("_c")): _*)
-      logs.groupBy(keys.map(col): _*)
-        .agg(max_by(payload, ordKey).as("_r"))
-        .filter(!col("_r._del"))
-        .select(schemaCols.map(c => col(s"_r.$c").as(c)) :+
-          col("_r._c").as(CommitTimeCol): _*)
+        c == "commit" || c == DeletedCol || c == CommitTimeCol || c == RecordKeyCol)
+      latestByKey(logs, table.recordKeyFields, logOrder(table, schemaCols))
+        .filter(!col(DeletedCol))
+        .select(schemaCols.map(col) :+ col("commit").as(CommitTimeCol): _*)
     } else {
       require(table.metaFields,
         s"incremental on COPY_ON_WRITE requires metaFields " +
@@ -445,17 +458,13 @@ object MergeWriter {
     }
   }
 
-  /** MOR compaction: fold all delta commits into the base, clear the log.
-    * At scale this is the same partition-pruned COW rewrite driven by the
-    * log's partition footprint. */
-  def compact(spark: SparkSession, table: LakeTable): Unit = {
-    if (table.tableType != LakeTable.MergeOnRead) return
-    val commits = listCommits(spark, table)
-    if (commits.isEmpty) return
-    val view = readView(spark, table).localCheckpoint(true)
-    partitionedWriter(view, table).mode(SaveMode.Overwrite).parquet(dataPath(table))
-    val p = new org.apache.hadoop.fs.Path(s"${table.path}/_delta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-  }
+  /** MOR compaction: fold all delta commits into the base with one
+    * whole-table [[rewrite]] of the snapshot, then clear the log. A
+    * partition whose rows were all deleted disappears with its files. */
+  def compact(spark: SparkSession, table: LakeTable): Unit =
+    if (table.tableType == LakeTable.MergeOnRead && listCommits(spark, table).nonEmpty) {
+      rewrite(spark, table, readView(spark, table), whole = true)
+      val p = new org.apache.hadoop.fs.Path(s"${table.path}/_delta")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
+    }
 }

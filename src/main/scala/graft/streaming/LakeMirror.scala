@@ -18,7 +18,7 @@ import graft.sink.{LakeTable, MergeWriter}
   * json re-parse of the batch), elected LATEST-PER-KEY by source
   * version with the change classes ranked so the post-state wins a
   * same-version tie (`update_preimage` < `delete` < insert/upsert/
-  * `update_postimage`), and applied as deletes + upserts. The election
+  * `update_postimage`), and applied as one keyed commit. The election
   * is version-aware in BOTH directions: a delete at v6 beats an upsert
   * at v5 of the same key even when one admitted batch spans both
   * versions (a version-blind "drop deletes whose key is upserted"
@@ -39,9 +39,10 @@ import graft.sink.{LakeTable, MergeWriter}
   *
   * Scale shape: everything is per-batch DataFrame work — json parse is
   * a codegen projection, the election a map-side `max_by` aggregate,
-  * the upsert/delete merges touch only affected partitions, and the
-  * tails' `maxFilesPerTrigger` bounds a batch, so a backfill of a 10⁶-
-  * file history streams through bounded increments. */
+  * a graft-lake replica takes one keyed commit per batch (one delta
+  * commit on MOR, one rewrite on COW), and the tails'
+  * `maxFilesPerTrigger` bounds a batch, so a backfill of a 10⁶-file
+  * history streams through bounded increments. */
 object LakeMirror {
 
   /** change classes admitted as upserts across the three tails. */
@@ -59,31 +60,23 @@ object LakeMirror {
     * a rewrite emits delete+insert and a CDF update pre+postimage for
     * the SAME key — the post-state wins the tie; across versions the
     * higher version wins outright. */
-  private def electLatest(parsed: DataFrame, keyNames: Seq[String],
-                          rowSchema: StructType): DataFrame = {
+  private def electLatest(parsed: DataFrame, keyNames: Seq[String]): DataFrame = {
     val rank = when(col("change_type") === "update_preimage", 0)
       .when(col("change_type") === "delete", 1)
       .otherwise(2) // insert / upsert / update_postimage
-    val payload = Seq("version", "change_type") ++
-      rowSchema.fieldNames.toSeq.filterNot(keyNames.contains)
-    parsed.groupBy(keyNames.map(col): _*)
-      .agg(max_by(struct(payload.map(col): _*),
-        struct(col("version"), rank)).as("_w"))
-      .select(keyNames.map(col) ++ Seq(col("_w.*")): _*)
+    MergeWriter.latestByKey(parsed, keyNames, Seq(col("version"), rank))
   }
 
-  /** Apply one micro-batch of change rows to the graft-lake replica. */
+  /** Apply one micro-batch of change rows to the graft-lake replica as
+    * ONE keyed commit ([[MergeWriter.applyChanges]]). */
   def applyBatch(spark: SparkSession, batch: DataFrame, lake: LakeTable,
                  rowSchema: StructType): Unit = {
-    val keys = lake.recordKeyFields
     val parsed = parseChanges(batch, rowSchema).localCheckpoint(false)
-    val latest = electLatest(parsed, keys, rowSchema).localCheckpoint(false)
-    val dels = latest.where(col("change_type") === "delete")
-      .drop("change_type")
+    val latest = electLatest(parsed, lake.recordKeyFields).localCheckpoint(false)
     val ups = latest.where(col("change_type").isin(UpsertTypes: _*))
       .drop("change_type")
-    if (!dels.isEmpty) MergeWriter.delete(spark, dels, lake)
-    if (!ups.isEmpty) MergeWriter.upsert(spark, ups, lake)
+    val dels = latest.where(col("change_type") === "delete")
+    MergeWriter.applyChanges(spark, lake, Some(ups), Some(dels))
   }
 
   /** Per-stream identity hash (20 bits): the namespace that keeps two
@@ -150,7 +143,7 @@ object LakeMirror {
     guardEpochRegression(target, streamId, epochId,
       maxMirroredIcebergEpoch(spark, target, streamBase))
     val parsed = parseChanges(batch, rowSchema).localCheckpoint(false)
-    val latest = electLatest(parsed, keyNames, rowSchema).localCheckpoint(false)
+    val latest = electLatest(parsed, keyNames).localCheckpoint(false)
     val ups = latest.where(col("change_type").isin(UpsertTypes: _*))
       .drop("version", "change_type")
       .select(rowSchema.fieldNames.toSeq.map(col): _*)
@@ -194,7 +187,7 @@ object LakeMirror {
                       epochId: Long, streamId: String = ""): Unit = {
     import graft.sink.DeltaWrite
     val parsed = parseChanges(batch, rowSchema).localCheckpoint(false)
-    val latest = electLatest(parsed, keyNames, rowSchema).localCheckpoint(false)
+    val latest = electLatest(parsed, keyNames).localCheckpoint(false)
     val ups = latest.where(col("change_type").isin(UpsertTypes: _*))
       .select(rowSchema.fieldNames.toSeq.map(col): _*)
     val dels = latest.where(col("change_type") === "delete")
@@ -228,7 +221,7 @@ object LakeMirror {
     guardEpochRegression(target, streamId, epochId,
       maxMirroredHudiEpoch(spark, target, upsertInstant.take(6)))
     val parsed = parseChanges(batch, rowSchema).localCheckpoint(false)
-    val latest = electLatest(parsed, Seq(keyCol), rowSchema)
+    val latest = electLatest(parsed, Seq(keyCol))
       .localCheckpoint(false)
     val ups = latest.where(col("change_type").isin(UpsertTypes: _*))
       .select(rowSchema.fieldNames.toSeq.map(col): _*)
@@ -276,7 +269,7 @@ object LakeMirror {
     guardEpochRegression(target, streamId, epochId,
       maxMirroredHudiEpoch(spark, target, instant.take(6)))
     val parsed = parseChanges(batch, rowSchema).localCheckpoint(false)
-    val latest = electLatest(parsed, Seq(keyCol), rowSchema)
+    val latest = electLatest(parsed, Seq(keyCol))
     val partDir = partitionField match {
       case Some(pf) => concat(lit(s"$pf="),
         when(col(pf).isNull, raise_error(lit(

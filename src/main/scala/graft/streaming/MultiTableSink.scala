@@ -15,14 +15,15 @@ import graft.sink.{LakeTable, MergeWriter}
   * checkpoint-based resume.
   *
   * Exactly-once: Structured Streaming's foreachBatch is at-least-once on
-  * replay; the keyed [[MergeWriter.upsert]] is idempotent (same batch
-  * re-applied converges to the same table state), which composes to
-  * effective exactly-once — the same contract the reference gets from Hudi
-  * upsert (SURVEY.md §2.4).
+  * replay; each table's share of a batch lands as ONE idempotent keyed
+  * commit ([[MergeWriter.applyChanges]], upserts and deletes together),
+  * which composes to effective exactly-once — the same contract the
+  * reference gets from Hudi upsert (SURVEY.md §2.4).
   *
-  * Scale: the per-batch demux collects only the DISTINCT (db, table) pairs
-  * (bounded by the table count, not row count); the batch is cached once
-  * and filtered per table, each write being the partition-pruned merge. */
+  * Scale: the per-batch demux collects only the DISTINCT (db, table,
+  * has-delete) tuples (bounded by the table count, not row count); the
+  * batch is cached once and filtered per table, each table written by one
+  * keyed commit — partition-pruned when its share has no deletes. */
 class MultiTableSink(
     pathTemplate: String,
     specs: Seq[CdcTableSpec],
@@ -44,16 +45,17 @@ class MultiTableSink(
     partitionFields = spec.partitionFields)
 
   /** One micro-batch: demux by (db, table), parse payload with the table's
-    * schema, apply the optional per-table SQL transform, then keyed
-    * upsert/delete. Idempotent on replay. */
+    * schema, apply the optional per-table SQL transform, then one keyed
+    * commit per table. Idempotent on replay. */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     batch.persist()
     try {
-      val present = batch.select("db", "table").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      present.foreach { case (db, table) =>
+      val present = batch.groupBy("db", "table")
+        .agg(max(col("op") <=> CdcSchema.OpDelete).as("has_delete"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
+      present.foreach { case (db, table, hasDelete) =>
         byName.get((db, table)).foreach { spec =>
           val rows = batch
             .filter(col("db") === db && col("table") === table)
@@ -65,16 +67,14 @@ class MultiTableSink(
           // latest image per key (by source offset) before merging, so a
           // delete followed by a re-insert resolves correctly
           val latest = MergeWriter.dedupByPrecombine(rows, spec.recordKeyFields, "offset")
-          val lake = resolveLakeTable(spec)
           val upserts0 = latest.filter(col("op") =!= CdcSchema.OpDelete)
             .drop("op", "ts_ms", "offset")
           val upserts = spec.transformerSql
             .map(sql => SqlTransform.transform(spark, upserts0, sql))
             .getOrElse(upserts0)
-          if (!upserts.isEmpty) MergeWriter.upsert(spark, upserts, lake)
-          val deletes = latest.filter(col("op") === CdcSchema.OpDelete)
-            .drop("op", "ts_ms", "offset")
-          if (!deletes.isEmpty) MergeWriter.delete(spark, deletes, lake)
+          val deletes = Option.when(hasDelete)(
+            latest.filter(col("op") === CdcSchema.OpDelete))
+          MergeWriter.applyChanges(spark, resolveLakeTable(spec), Some(upserts), deletes)
         }
       }
     } finally batch.unpersist()

@@ -65,6 +65,8 @@ class MultiTableSinkSpec extends SparkSuite {
 
     assert(readTable(root, "person") === Set((2L, "keep2", 2L)))
     assert(readTable(root, "student") === Set.empty)
+    // batch 2's update and delete on person land as ONE commit
+    assert(MergeWriter.latestCommit(spark, sink.resolveLakeTable(specs().head)) === 2L)
 
     // replaying the SAME batch against the table is idempotent (the
     // at-least-once → exactly-once argument): apply batch 2's person rows again
