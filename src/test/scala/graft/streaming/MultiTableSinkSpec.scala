@@ -1,7 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
@@ -9,7 +14,8 @@ import graft.sink.MergeWriter
 
 /** W3 — streaming multi-table demux: routing, per-table schema, in-batch
   * conflict resolution, delete ops, path templating, checkpointed resume
-  * with idempotent replay, per-table transformer SQL. */
+  * with idempotent replay, per-table transformer SQL, colliding specs,
+  * concurrent per-table commits (job group, failure and replay). */
 class MultiTableSinkSpec extends SparkSuite {
 
   import spark.implicits._
@@ -18,15 +24,36 @@ class MultiTableSinkSpec extends SparkSuite {
     StructField("id", LongType), StructField("v", StringType),
     StructField("ver", LongType)))
 
-  private def specs(transformer: Option[String] = None) = Seq(
-    CdcTableSpec("db1", "person", payloadSchema, Seq("id"), "ver",
-      transformerSql = transformer),
-    CdcTableSpec("db1", "student", payloadSchema, Seq("id"), "ver"))
+  private def specs(transformer: Option[String] = None) =
+    tableSpecs(Seq("person", "student"), transformer.map("person" -> _).toMap)
+
+  private def tableSpecs(tables: Seq[String], transformer: Map[String, String] = Map.empty) =
+    tables.map(t => CdcTableSpec("db1", t, payloadSchema, Seq("id"), "ver",
+      transformerSql = transformer.get(t)))
 
   private def ev(table: String, op: String, offset: Long, id: Long,
                  v: String, ver: Long): String =
     s"""{"db":"db1","table":"$table","op":"$op","ts_ms":${1000 + offset},""" +
       s""""offset":$offset,"payload":"{\\"id\\":$id,\\"v\\":\\"$v\\",\\"ver\\":$ver}"}"""
+
+  /** One CDC event; `ev` renders it as a JSON line, `batchOf` as rows. */
+  private case class Ev(table: String, op: String, offset: Long, id: Long,
+                        v: String, ver: Long) {
+    def json: String = ev(table, op, offset, id, v, ver)
+  }
+
+  private def batchOf(evs: Seq[Ev]): DataFrame = evs.map(e =>
+    ("db1", e.table, e.op, 1000 + e.offset, e.offset,
+      s"""{"id":${e.id},"v":"${e.v}","ver":${e.ver}}"""))
+    .toDF("db", "table", "op", "ts_ms", "offset", "payload")
+
+  /** Plain-Scala snapshot of `table` after `evs`: the last event per key by
+    * offset wins, a delete removes the key. */
+  private def expected(evs: Seq[Ev], table: String): Set[(Long, String, Long)] =
+    evs.filter(_.table == table).sortBy(_.offset)
+      .foldLeft(Map.empty[Long, (Long, String, Long)]) { (m, e) =>
+        if (e.op == "delete") m - e.id else m + (e.id -> ((e.id, e.v, e.ver)))
+      }.values.toSet
 
   private def readTable(root: String, table: String): Set[(Long, String, Long)] = {
     val p = s"$root/db1/ods_db1_$table/data"
@@ -106,6 +133,101 @@ class MultiTableSinkSpec extends SparkSuite {
   test("path template substitutes both placeholders") {
     val sink = new MultiTableSink("/lake/{db}/ods_{db}_{table}", specs())
     assert(sink.resolvePath("a", "b") === "/lake/a/ods_a_b")
+  }
+
+  test("two specs for one (db, table) are rejected at construction") {
+    val e = intercept[IllegalArgumentException](
+      new MultiTableSink("/lake/{db}/ods_{db}_{table}", specs() :+ specs().head))
+    assert(e.getMessage.contains("db1.person and db1.person"))
+  }
+
+  test("two tables resolving to one lake path are rejected at construction") {
+    // a template without {table} puts every table of a db on one path
+    val e = intercept[IllegalArgumentException](
+      new MultiTableSink("/lake/{db}/ods", specs()))
+    assert(e.getMessage.contains("db1.person and db1.student"))
+    assert(e.getMessage.contains("/lake/db1/ods"))
+  }
+
+  test("a failing table fails the batch after the other tables commit; replay completes it") {
+    val root = Files.createTempDirectory("graft-cdc5").toString
+    val template = s"$root/{db}/ods_{db}_{table}"
+    val tables = Seq("person", "student", "teacher")
+    val evs = Seq(
+      Ev("person", "insert", 1, 1, "a", 1),
+      Ev("student", "insert", 2, 10, "s", 1),
+      Ev("teacher", "insert", 3, 20, "t", 1),
+      Ev("person", "insert", 4, 2, "b", 1),
+      Ev("teacher", "delete", 5, 20, "x", 2),
+      Ev("teacher", "insert", 6, 21, "u", 1),
+      Ev("student", "update", 7, 10, "s2", 2))
+    val batch = batchOf(evs)
+    val broken = new MultiTableSink(template,
+      tableSpecs(tables, Map("student" -> "SELECT *, no_such_col AS x FROM <SRC>")), 1)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[AnalysisException](broken.processBatch(batch, 0))
+    assert(e.getMessage.contains("no_such_col"))
+    // the other tables' commits still landed, and nothing is left behind
+    val sink = new MultiTableSink(template, tableSpecs(tables), 1)
+    val commits = tables.map(t => MergeWriter.latestCommit(spark,
+      sink.resolveLakeTable(tableSpecs(Seq(t)).head)))
+    assert(commits === Seq(1L, 0L, 1L))
+    assert(readTable(root, "person") === expected(evs, "person"))
+    assert(readTable(root, "teacher") === expected(evs, "teacher"))
+    assert(readTable(root, "student") === Set.empty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith(MultiTableSink.CommitThreadPrefix)))
+    // with the spec fixed, replaying the batch lands every table
+    sink.processBatch(batch, 0)
+    tables.foreach(t => assert(readTable(root, t) === expected(evs, t), t))
+  }
+
+  test("streaming: each table commits once per batch under the query's job group") {
+    val root = Files.createTempDirectory("graft-cdc6").toString
+    val inDir = Files.createTempDirectory("graft-cdc6-in").toString
+    val ckpt = Files.createTempDirectory("graft-cdc6-ckpt").toString
+    // three tables: below three task slots, one waits for a commit thread
+    val tables = Seq("person", "student", "teacher")
+    val sink = new MultiTableSink(s"$root/{db}/ods_{db}_{table}", tableSpecs(tables), 1)
+    val lakes = tableSpecs(tables).map(sink.resolveLakeTable)
+    // an initial image per table, so the streamed batch rewrites each one
+    val initial = tables.zipWithIndex.flatMap { case (t, i) =>
+      Seq(Ev(t, "insert", 2 * i + 1, 1, s"$t-1", 1), Ev(t, "insert", 2 * i + 2, 2, s"$t-2", 1))
+    }
+    sink.processBatch(batchOf(initial), 0)
+    val before = lakes.map(MergeWriter.latestCommit(spark, _))
+    val streamed = tables.zipWithIndex.flatMap { case (t, i) =>
+      val o = 100 + 10 * i
+      Seq(Ev(t, "update", o, 1, s"$t-1b", 2), Ev(t, "delete", o + 1, 2, "x", 2),
+        Ev(t, "insert", o + 2, 3, s"$t-3", 1), Ev(t, "update", o + 3, 3, s"$t-3b", 2))
+    }
+    Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), streamed.map(_.json).mkString("\n"))
+
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull)): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = sink.start(CdcSource.fileStream(spark, inDir), ckpt)
+      try q.processAllAvailable() finally q.stop()
+      // listener events arrive in order: once this marker job's start has
+      // arrived, so has every job the query started
+      spark.sparkContext.setJobGroup("marker", "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val until = System.currentTimeMillis() + 30000
+      while (!groups.contains("marker") && System.currentTimeMillis() < until) Thread.sleep(20)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val (marker, seen) = groups.asScala.toSeq.partition(_ == "marker")
+    assert(marker.nonEmpty)
+    assert(seen.nonEmpty && seen.forall(_ == q.runId.toString), seen.distinct)
+    assert(lakes.map(MergeWriter.latestCommit(spark, _)) === before.map(_ + 1))
+    tables.foreach(t => assert(readTable(root, t) === expected(initial ++ streamed, t), t))
   }
 
   test("W4 console debug sink runs a micro-batch (truncate=false, numRows)") {
