@@ -31,11 +31,10 @@ object SqlTransform {
     // temp view names don't like dashes (reference TransformUtils.scala:32)
     val tmpTable = "GRAFT_SRC_TMP_TABLE_" + UUID.randomUUID.toString.replace("-", "_")
     df.createOrReplaceTempView(tmpTable)
-    val out = spark.sql(sql.replace(SrcPattern, tmpTable))
-    // the analyzed plan no longer references the view — drop it so repeated
-    // transforms don't leak catalog entries
-    spark.catalog.dropTempView(tmpTable)
-    out
+    // the analyzed plan no longer references the view — drop it, also when
+    // the SQL fails analysis, so repeated transforms don't leak catalog entries
+    try spark.sql(sql.replace(SrcPattern, tmpTable))
+    finally spark.catalog.dropTempView(tmpTable): Unit
   }
 
   /** Config-gated variant: run the transform iff the key is set — the Mongo

@@ -15,7 +15,9 @@ import scala.util.hashing.MurmurHash3
   * via a typed [[Aggregator]] (Kirsch-Mitzenmacher double hashing: k
   * positions from two murmur hashes). One small row per file, stored as
   * parquet under `<table>/_index/key_bloom` with the build parameters,
-  * stamped with the commit it reflects.
+  * stamped (`as_of_commit`) with the manifest version whose files it
+  * covers — compaction and clustering publish a version too, so they
+  * stale the index although they keep the data-commit number.
   *
   * Query: for a batch of lookup keys, keep files whose bloom might contain
   * ANY of them — evaluated DISTRIBUTED (index ⋈ broadcast keys + a
@@ -27,8 +29,6 @@ import scala.util.hashing.MurmurHash3
 object BloomIndex {
 
   def indexPath(table: LakeTable): String = s"${table.path}/_index/key_bloom"
-
-  private def dataPath(table: LakeTable): String = s"${table.path}/data"
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -94,18 +94,20 @@ object BloomIndex {
   private[sink] def keyExpr(table: LakeTable) =
     concat_ws(":", table.recordKeyFields.map(c => col(c).cast("string")): _*)
 
-  /** (Re)build the index: one aggregation pass, one row per file. */
+  /** (Re)build the index over the current version's base files: one
+    * aggregation pass, one row per file. */
   def rebuild(spark: SparkSession, table: LakeTable,
               expectedKeysPerFile: Int = 100000, fpp: Double = 0.01): Unit = {
-    if (!exists(spark, dataPath(table))) return
+    val (version, files) = MergeWriter.baseFiles(spark, table)
+    if (files.isEmpty) return
     val (m, k) = sizing(expectedKeysPerFile, fpp)
     val bloomUdaf = udaf(new BloomAgg(m, k), Encoders.STRING)
-    spark.read.parquet(dataPath(table))
+    MergeWriter.readFiles(spark, table, files)
       .select(col("_metadata.file_path").as("file"), keyExpr(table).as("_key"))
       .groupBy("file")
       .agg(bloomUdaf(col("_key")).as("bloom"), count(lit(1)).as("rows"))
       .withColumn("m_bits", lit(m)).withColumn("k_hashes", lit(k))
-      .withColumn("as_of_commit", lit(MergeWriter.latestCommit(spark, table)))
+      .withColumn("as_of_commit", lit(version))
       .repartition(1)
       .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
   }
@@ -114,9 +116,10 @@ object BloomIndex {
     if (exists(spark, indexPath(table))) Some(spark.read.parquet(indexPath(table)))
     else None
 
+  /** True iff the index covers the table's current manifest version. */
   def isFresh(spark: SparkSession, table: LakeTable): Boolean =
     stats(spark, table).exists { s =>
-      s.agg(min("as_of_commit")).head.getLong(0) == MergeWriter.latestCommit(spark, table)
+      s.agg(min("as_of_commit")).head.getLong(0) == MergeWriter.baseFiles(spark, table)._1
     }
 
   /** Surviving files for a key batch as a DataFrame (one `file` column) —
@@ -168,8 +171,9 @@ object BloomIndex {
 
   /** Incremental maintenance after a file-slice write: drop the index rows
     * of `removed` files, bloom ONLY the `added` files (O(batch), not
-    * O(table)), restamp the watermark. Falls back to [[rebuild]] when no
-    * index exists or the sizing disagrees. */
+    * O(table)), restamp it with the current manifest version (the one
+    * the file-slice commit just published). Falls back to [[rebuild]] when
+    * no index exists or the sizing disagrees. */
   def maintain(spark: SparkSession, table: LakeTable,
                added: Seq[String], removed: Seq[String],
                expectedKeysPerFile: Int = 100000, fpp: Double = 0.01): Unit = {
@@ -193,7 +197,7 @@ object BloomIndex {
             .agg(bloomUdaf(col("_key")).as("bloom"), count(lit(1)).as("rows"))
             .withColumn("m_bits", lit(m)).withColumn("k_hashes", lit(k)))
         val combined = newRows.fold(kept)(kept.unionByName(_))
-          .withColumn("as_of_commit", lit(MergeWriter.latestCommit(spark, table)))
+          .withColumn("as_of_commit", lit(MergeWriter.baseFiles(spark, table)._1))
           .localCheckpoint(true) // we overwrite the path we just read
         combined.repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
@@ -211,7 +215,7 @@ object BloomIndex {
   def readKeys(spark: SparkSession, table: LakeTable, keys: Seq[String],
                maxFileListSize: Int = 100000): DataFrame = {
     val exact = keyExpr(table).isin(keys: _*)
-    val full = spark.read.parquet(dataPath(table))
+    val full = MergeWriter.readFiles(spark, table, MergeWriter.baseFiles(spark, table)._2)
     if (!isFresh(spark, table)) return full.filter(exact)
     val survivors = pruneFilesForKeysDf(spark, table, keys)
     // ONE job decides the branch AND yields the list when it is small
@@ -219,8 +223,7 @@ object BloomIndex {
     val head = survivors.limit(maxFileListSize + 1).collect().map(_.getString(0))
     if (head.isEmpty) full.filter(lit(false))
     else if (head.length <= maxFileListSize)
-      spark.read.option("basePath", dataPath(table))
-        .parquet(head.toSeq: _*).filter(exact)
+      MergeWriter.readFiles(spark, table, head.toSeq).filter(exact)
     else {
       // collision-proof: qualify via the survivors frame and a name no
       // data schema will carry

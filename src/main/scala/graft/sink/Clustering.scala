@@ -70,20 +70,18 @@ object Clustering {
     *  - `zorder = false`: linear lexicographic sort.
     * `numFiles` bounds the rewritten file count (Hudi's
     * `hoodie.clustering.plan.strategy.target.file.max.bytes` analog,
-    * expressed in files at this scale). */
+    * expressed in files at this scale). Published as one version that
+    * keeps the table's data-commit number. */
   def cluster(spark: SparkSession, table: LakeTable, cols: Seq[String],
               numFiles: Int, zorder: Boolean = true, bits: Int = 16): Unit = {
     // a MOR table must fold its delta log first: clustering rewrites the
     // base files, and a stale log replaying over them would double-apply
     if (table.tableType == LakeTable.MergeOnRead) MergeWriter.compact(spark, table)
-    val base = MergeWriter.readView(spark, table)
-    if (base.isEmpty) return
-    val sortKey: Seq[Column] =
-      if (zorder) Seq(zValue(cols.map(col), columnRanges(base, cols), bits))
-      else cols.map(col)
-    val clustered = base
-      .repartitionByRange(numFiles, sortKey: _*)
-      .sortWithinPartitions(sortKey: _*)
-    MergeWriter.rewrite(spark, table, clustered, whole = true)
+    MergeWriter.rewriteView(spark, table) { base =>
+      val sortKey: Seq[Column] =
+        if (zorder) Seq(zValue(cols.map(col), columnRanges(base, cols), bits))
+        else cols.map(col)
+      base.repartitionByRange(numFiles, sortKey: _*).sortWithinPartitions(sortKey: _*)
+    }
   }
 }

@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
   *  - pruning reads only the index (MBs, never the data) and collects just
   *    the surviving file list — the same driver-side footprint Spark's own
   *    file listing already has;
-  *  - freshness is tracked against the table's commit timeline: a stale or
-  *    missing index NEVER affects correctness — [[read]] falls back to the
+  *  - freshness is tracked against the table's manifest version (the
+  *    index records the version whose files it was built from; compaction
+  *    and clustering publish versions too): a stale or missing index
+  *    NEVER affects correctness — [[read]] falls back to the
   *    full scan with the same residual filter.
   */
 object ColumnStats {
@@ -33,21 +35,21 @@ object ColumnStats {
 
   def indexPath(table: LakeTable): String = s"${table.path}/_index/column_stats"
 
-  private def dataPath(table: LakeTable): String = s"${table.path}/data"
-
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** (Re)build the index for `columns`: one aggregation pass over the data,
-    * one row per file, stamped with the commit it reflects. Like Hudi's
-    * metadata index this is a table service — call it after writes (or let
-    * a stale index degrade to full scans, never to wrong answers). */
+  /** (Re)build the index for `columns`: one aggregation pass over the
+    * current version's base files, one row per file, stamped with that
+    * version. Like Hudi's metadata index this is a table service — call it
+    * after writes (or let a stale index degrade to full scans, never to
+    * wrong answers). */
   def rebuild(spark: SparkSession, table: LakeTable, columns: Seq[String]): Unit = {
     require(columns.nonEmpty, "no columns to index")
-    if (!exists(spark, dataPath(table))) return
-    val data = spark.read.parquet(dataPath(table))
+    val (version, files) = MergeWriter.baseFiles(spark, table)
+    if (files.isEmpty) return
+    val data = MergeWriter.readFiles(spark, table, files)
     val aggs = columns.flatMap { c =>
       Seq(min(col(c)).as(s"${c}__min"),
           max(col(c)).as(s"${c}__max"),
@@ -55,7 +57,7 @@ object ColumnStats {
     }
     data.groupBy(col("_metadata.file_path").as("file"))
       .agg(count(lit(1)).as("rows"), aggs: _*)
-      .withColumn("as_of_commit", lit(MergeWriter.latestCommit(spark, table)))
+      .withColumn("as_of_commit", lit(version))
       .repartition(1) // index is tiny relative to data; one file per rebuild
       .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
   }
@@ -65,11 +67,10 @@ object ColumnStats {
     if (exists(spark, indexPath(table))) Some(spark.read.parquet(indexPath(table)))
     else None
 
-  /** True iff the index reflects the table's latest commit. */
+  /** True iff the index covers the table's current manifest version. */
   def isFresh(spark: SparkSession, table: LakeTable): Boolean =
     stats(spark, table).exists { s =>
-      val asOf = s.agg(min("as_of_commit")).head.getLong(0)
-      asOf == MergeWriter.latestCommit(spark, table)
+      s.agg(min("as_of_commit")).head.getLong(0) == MergeWriter.baseFiles(spark, table)._1
     }
 
   /** Surviving files as a DataFrame (one `file` column) — stays
@@ -119,7 +120,7 @@ object ColumnStats {
     * survivors the scan was near-full anyway. */
   def read(spark: SparkSession, table: LakeTable,
            bounds: Seq[ColumnRange], maxFileListSize: Int = 100000): DataFrame = {
-    val full = spark.read.parquet(dataPath(table))
+    val full = MergeWriter.readFiles(spark, table, MergeWriter.baseFiles(spark, table)._2)
     if (!isFresh(spark, table)) return full.filter(residual(bounds))
     val survivors = pruneFilesDf(spark, table, bounds)
     // ONE job decides the branch AND yields the list when it is small:
@@ -127,8 +128,7 @@ object ColumnStats {
     val head = survivors.limit(maxFileListSize + 1).collect().map(_.getString(0))
     if (head.isEmpty) full.filter(lit(false))
     else if (head.length <= maxFileListSize)
-      spark.read.option("basePath", dataPath(table))
-        .parquet(head.toSeq: _*).filter(residual(bounds))
+      MergeWriter.readFiles(spark, table, head.toSeq).filter(residual(bounds))
     else {
       // collision-proof: qualify via the survivors frame and a name no
       // data schema will carry

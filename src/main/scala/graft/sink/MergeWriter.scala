@@ -1,7 +1,11 @@
 package graft.sink
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.BucketedLake
+import graft.sources.BucketedLake.ManifestEntry
 
 /** W1 — Hudi-equivalent keyed merge semantics over partitioned parquet
   * (reference writes `format("hudi").mode(Append)` with recordkey/precombine/
@@ -17,28 +21,38 @@ import org.apache.spark.sql.functions._
   *    (no cross-batch precombine comparison — last write wins, exactly the
   *    reference's observable behavior);
   *  - ONE keyed commit per batch: [[applyChanges]] lands a batch's upserts
-  *    and deletes under one commit marker ([[upsert]] and [[delete]] are
-  *    its one-sided calls); a key on both sides keeps its upsert; a
-  *    partition left without rows by deletes disappears;
+  *    and deletes as one data commit ([[upsert]] and [[delete]] are its
+  *    one-sided calls); a key on both sides keeps its upsert; a partition
+  *    left without rows by deletes disappears;
   *  - `insert`/`bulk_insert` append without merging (bulk_insert is the
   *    reference's high-throughput path, hudi_mongodb_batch.properties:15-16).
   *
-  * Scale design (100 TB):
-  *  - a COPY_ON_WRITE commit without deletes reads and rewrites only the
-  *    batch's partitions (plan-time pruned read, dynamic partition
-  *    overwrite); delete keys carry no partition, so a commit with deletes
-  *    rewrites the whole table;
-  *  - MERGE_ON_READ appends the batch as ONE delta log `_delta/commit=N/`
-  *    (payload rows and `_graft_deleted` tombstones together); `readView`
-  *    resolves key conflicts at read time by (commit DESC, payload above
-  *    tombstone, precombine DESC); `compact()` folds logs into the base.
-  *    Write amplification is O(batch), not O(table);
-  *  - the only shuffles are the unavoidable hash-partition on the record key
-  *    for dedup and the final partition-path clustering before write;
-  *    every table rewrite goes through one [[rewrite]], whose lineage
-  *    barrier (localCheckpoint — on a real cluster a reliable checkpoint /
-  *    staging dir) lets us overwrite a path we just read.
-  */
+  * Commit protocol ([[publish]]), for every write: new part files land in
+  * `data/` (base) or `_delta/commit=N/` (MOR log), never over an old file;
+  * then ONE [[BucketedLake]] manifest version lists the live files and
+  * carries the data-commit number ([[latestCommit]]; compaction and
+  * clustering keep it). Its pointer flip is the COMMIT POINT. Only then are
+  * the files under `data/` and `_delta/` it does not reference deleted,
+  * with emptied directories and the superseded manifest. A commit that
+  * throws leaves the old snapshot; its replay lands and reclaims the
+  * failed attempt's files. Readers take the version's file list; direct
+  * listers of `data/` ([[CatalogSync]]'s Hive location, specs) see exactly
+  * the snapshot once a commit has finished. A commit's files are the ones
+  * its write added to the listing, so a table takes ONE writer at a time
+  * (Hudi's single-writer mode); a second writer's publish fails the
+  * version gate, but files it wrote meanwhile may be taken as the first
+  * writer's. A table written before commits published versions (no
+  * pointer) reads its listing, as the old readers did, and its next
+  * commit adopts those files into its first version.
+  *
+  * Scale design (100 TB): a COPY_ON_WRITE commit without deletes reads and
+  * rewrites only the batch's partitions (delete keys carry no partition,
+  * so a commit with deletes rewrites the whole table); MERGE_ON_READ
+  * appends the batch as ONE delta log of payload rows and `_graft_deleted`
+  * tombstones, resolved at read time by (commit DESC, payload above
+  * tombstone, precombine DESC) until `compact()` folds it into the base —
+  * O(batch) write amplification. The only shuffles are the key shuffle of
+  * the dedup and the partition-path clustering before write. */
 object MergeWriter {
 
   /** Hudi write operations (hoodie.datasource.write.operation). */
@@ -50,12 +64,16 @@ object MergeWriter {
   /** Tombstone flag of a MOR delta-log row (true = the key is deleted). */
   private val DeletedCol = "_graft_deleted"
 
-  /** Hudi-style per-record meta columns (`_hoodie_commit_time` /
-    * `_hoodie_record_key` analogs, cf. `hoodie.populate.meta.fields`),
-    * stamped on write when `table.metaFields` is set. Commit provenance on
-    * every record is what makes incremental pull work on COPY_ON_WRITE. */
+  /** Hudi-style per-record meta columns (`hoodie.populate.meta.fields`),
+    * stamped when `table.metaFields` is set: commit provenance on every
+    * record is what makes incremental pull work on COPY_ON_WRITE. */
   val CommitTimeCol = "_graft_commit_time"
   val RecordKeyCol = "_graft_record_key"
+
+  /** The manifest txn entry carrying the table's data-commit number. */
+  private val CommitTxn = "_graft_commit"
+  private val DataDir = "data"
+  private val DeltaDir = "_delta"
 
   // ---------------------------------------------------------------- dedup
 
@@ -82,17 +100,104 @@ object MergeWriter {
     latestByKey(df, keys,
       precombineOrder(precombine, df.columns.filterNot(keys.contains).toSeq))
 
-  /** Pure merge of a (already deduped) batch into existing rows:
-    * incoming replaces stored on key match; stored rows with unmatched keys
-    * survive. Exposed separately so tests and the oracle can target it.
-    *
-    * Schema evolution (Hudi-style additive): a column present on only one
-    * side is null-filled on the other, so a batch can add columns to a
-    * table (and an old-schema batch can still merge into an evolved one). */
+  /** Pure merge of a (deduped) batch into existing rows: incoming replaces
+    * stored on key match. Exposed separately so tests and the oracle can
+    * target it. Additive schema evolution: a column present on one side
+    * only is null-filled on the other, so a batch can add columns (and an
+    * old-schema batch still merges into an evolved table). */
   def mergeBatch(existing: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame = {
     val survivors = existing
       .join(batch.select(keys.map(col): _*), keys, "left_anti")
     survivors.unionByName(batch, allowMissingColumns = true)
+  }
+
+  // --------------------------------------------------------------- commit
+
+  /** One published version: manifest version (0 before the first commit),
+    * data-commit number and live files (table-relative). */
+  private final case class Snapshot(version: Long, commit: Long, entries: Seq[ManifestEntry]) {
+    def base: Seq[ManifestEntry] = entries.filter(_.rel.startsWith(s"$DataDir/"))
+    /** MOR log files (`_delta/commit=N/...`) of the commits `p` accepts. */
+    def log(p: Long => Boolean): Seq[ManifestEntry] =
+      entries.filter(e => e.rel.startsWith(DeltaDir) && p(logCommit(e.rel)))
+  }
+
+  private def logCommit(rel: String): Long = rel.split('/')(1).stripPrefix("commit=").toLong
+
+  private def snapshot(spark: SparkSession, table: LakeTable): Snapshot = {
+    val v = BucketedLake.currentVersion(spark, table.path)
+    try v.flatMap(n => BucketedLake.readManifestFull(spark, table.path, Some(n))
+      .map(m => Snapshot(n, m.txns.getOrElse(CommitTxn, 0L), m.entries)))
+      .getOrElse(unpublished(fsOf(spark, table), table))
+    catch { // a commit published past `v` and reclaimed its manifest
+      case _: IllegalArgumentException if BucketedLake.currentVersion(spark, table.path) != v =>
+        snapshot(spark, table)
+    }
+  }
+
+  private def fsOf(spark: SparkSession, table: LakeTable): FileSystem =
+    new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every file under `data/` and `_delta/` by table-relative path, with
+    * its size; directories Spark hides (`_temporary`) are skipped. */
+  private def listFiles(fs: FileSystem, table: LakeTable): Map[String, Long] = {
+    val out = Map.newBuilder[String, Long]
+    def walk(p: Path, rel: String): Unit = fs.listStatus(p).foreach { st =>
+      val name = st.getPath.getName
+      if (!st.isDirectory) out += s"$rel/$name" -> st.getLen
+      else if (!(name.startsWith("_") && !name.contains("=")) && !name.startsWith("."))
+        walk(st.getPath, s"$rel/$name")
+    }
+    for (dir <- Seq(DataDir, DeltaDir) if fs.exists(new Path(table.path, dir)))
+      walk(new Path(table.path, dir), dir)
+    out.result()
+  }
+
+  /** A table without a published version: its parquet listing, which
+    * is what readers took before versions existed, and as data commit the
+    * highest of its `_delta/commit=N` logs and of the `_commits/N` markers
+    * those writers kept (read only here, never written). A new table
+    * lists nothing and starts at commit 0. */
+  private def unpublished(fs: FileSystem, table: LakeTable): Snapshot = {
+    val files = listFiles(fs, table).toSeq.collect { case (rel, size)
+      if rel.endsWith(".parquet") => ManifestEntry(0, -1L, size, rel) }
+    val markers = new Path(table.path, "_commits")
+    val marked = if (!fs.exists(markers)) Nil
+      else fs.listStatus(markers).toSeq.flatMap(_.getPath.getName.toLongOption)
+    val logged = files.collect { case e if e.rel.startsWith(DeltaDir) => logCommit(e.rel) }
+    Snapshot(0L, (marked ++ logged).foldLeft(0L)(math.max), files)
+  }
+
+  private def parents(rel: String): Seq[String] =
+    rel.split('/').toSeq.inits.drop(1).filter(_.nonEmpty).map(_.mkString("/")).toSeq
+
+  /** The commit protocol (object doc): `write` adds files, the listings
+    * around it tell which (a failed attempt's never count), `keep` picks
+    * the `prior` entries that stay live given them. Returns the added. */
+  private def publish(spark: SparkSession, table: LakeTable, prior: Snapshot,
+                      commit: Long)(write: => Unit)(
+                      keep: Seq[ManifestEntry] => Seq[ManifestEntry]): Seq[ManifestEntry] = {
+    val fs = fsOf(spark, table)
+    val before = listFiles(fs, table)
+    write
+    val listed = listFiles(fs, table)
+    // row counts stay unknown (-1): filling them would read every footer
+    val added = listed.toSeq.collect { case (rel, size)
+      if rel.endsWith(".parquet") && !before.contains(rel) => ManifestEntry(0, -1L, size, rel) }
+    val entries = keep(added) ++ added
+    val base = prior.version
+    BucketedLake.writeManifest(spark, table.path, entries, base = Some(base),
+      txns = Map(CommitTxn -> commit))
+    // committed: reclaiming is best effort, and what a failed delete leaves
+    // is unreferenced, so the next commit reclaims it
+    val live = entries.map(_.rel).toSet
+    val doomed = (prior.entries.map(_.rel) ++ listed.keys).toSet -- live
+    def attempt(p: Path): Unit = scala.util.Try(fs.delete(p, false)): Unit
+    doomed.foreach(r => attempt(new Path(table.path, r)))
+    (doomed.flatMap(parents) -- live.flatMap(parents)).toSeq.sortBy(-_.length)
+      .foreach(d => attempt(new Path(table.path, d)))
+    if (base > 0) attempt(new Path(table.path, BucketedLake.versionedManifest(base)))
+    added
   }
 
   // ---------------------------------------------------------------- write
@@ -114,14 +219,21 @@ object MergeWriter {
       .withColumn(RecordKeyCol,
         concat_ws(":", table.recordKeyFields.map(c => col(c).cast("string")): _*))
 
+  /** Append `df` to the base as new part files. */
+  private def writeBase(df: DataFrame, table: LakeTable): Unit = {
+    val w = df.write.mode(SaveMode.Append)
+    (if (table.isPartitioned) w.partitionBy(table.partitionFields: _*) else w)
+      .parquet(dataPath(table))
+  }
+
   /** insert/bulk_insert: straight partitioned append, no merge, no key
     * shuffle — the 100 TB bulk-load path. */
   def append(batch: DataFrame, table: LakeTable): Unit = {
     val spark = batch.sparkSession
-    val commit = nextCommit(spark, table)
-    partitionedWriter(stampMeta(batch, table, commit), table)
-      .mode(SaveMode.Append).parquet(dataPath(table))
-    writeCommitMarker(spark, table, commit)
+    val prior = snapshot(spark, table)
+    val commit = prior.commit + 1L
+    publish(spark, table, prior, commit)(
+      writeBase(stampMeta(batch, table, commit), table))(_ => prior.entries): Unit
   }
 
   /** upsert: [[applyChanges]] with no deletes — one keyed commit whose
@@ -134,59 +246,53 @@ object MergeWriter {
   def delete(spark: SparkSession, batch: DataFrame, table: LakeTable): Unit =
     applyChanges(spark, table, None, Some(batch))
 
-  /** Apply one batch as ONE keyed commit (one write, one marker) from
-    * `upserts` (deduped by precombine; each replaces the stored row with
-    * its key) and `deletes` (only their key columns are read); either side
-    * may be absent, not both. A key on both sides keeps its upsert; a
-    * partition left without rows disappears. MOR writes one delta commit
-    * of payload rows and tombstones; COW anti-joins the base on all the
-    * batch's keys, unions the upserts and rewrites once (see the object
-    * doc for which partitions). So a crash cannot leave a batch's upserts
-    * applied without its deletes. */
+  /** Apply one batch as ONE keyed commit from `upserts` (deduped by
+    * precombine; each replaces the stored row with its key) and `deletes`
+    * (key columns only); either side may be absent, not both. A key on
+    * both sides keeps its upsert. MOR writes one delta commit of payload
+    * rows and tombstones; COW anti-joins the base on all the batch's keys,
+    * unions the upserts and rewrites once. */
   def applyChanges(spark: SparkSession, table: LakeTable,
                    upserts: Option[DataFrame], deletes: Option[DataFrame]): Unit = {
     require(upserts.isDefined || deletes.isDefined,
       "applyChanges needs upserts, deletes or both")
     val keys = table.recordKeyFields
-    val commit = nextCommit(spark, table)
+    val prior = snapshot(spark, table)
+    val commit = prior.commit + 1L
     val ups = upserts.map(b =>
       stampMeta(dedupByPrecombine(b, keys, table.precombineField), table, commit))
     val delKeys = deletes.map(_.select(keys.map(col): _*))
     if (table.tableType == LakeTable.MergeOnRead) {
       // payload rows carry a null flag, which readLog reads as false
       val tombstones = delKeys.map(_.withColumn(DeletedCol, lit(true)))
-      (ups ++ tombstones).reduce(_.unionByName(_, allowMissingColumns = true))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"${table.path}/_delta/commit=$commit")
-    } else cowCommit(spark, table, ups, delKeys)
-    writeCommitMarker(spark, table, commit)
+      publish(spark, table, prior, commit)(
+        (ups ++ tombstones).reduce(_.unionByName(_, allowMissingColumns = true))
+          .write.mode(SaveMode.Append)
+          .parquet(s"${table.path}/$DeltaDir/commit=$commit"))(_ => prior.entries): Unit
+    } else cowCommit(spark, table, prior, commit, ups, delKeys)
   }
 
   /** COW side of [[applyChanges]]: one anti-join of the base on every key
     * of the batch, one union with the upserts, one rewrite. */
-  private def cowCommit(spark: SparkSession, table: LakeTable,
-                        ups: Option[DataFrame], delKeys: Option[DataFrame]): Unit =
-    readBase(spark, table) match {
-      case None =>
-        ups.foreach(partitionedWriter(_, table)
-          .mode(SaveMode.Overwrite).parquet(dataPath(table)))
-      case Some(existing) =>
-        val keys = table.recordKeyFields
-        // without deletes `ups` is defined (applyChanges requires a side)
-        val scope = if (delKeys.isEmpty && table.isPartitioned)
-          affectedPartitions(existing, ups.get, table) else existing
-        val batchKeys = (ups.map(_.select(keys.map(col): _*)) ++ delKeys).reduce(_ union _)
-        val survivors = scope.join(batchKeys, keys, "left_anti")
-        rewrite(spark, table,
-          ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true)),
-          whole = delKeys.isDefined)
+  private def cowCommit(spark: SparkSession, table: LakeTable, prior: Snapshot,
+                        commit: Long, ups: Option[DataFrame],
+                        delKeys: Option[DataFrame]): Unit = {
+    val rows = readBase(spark, table, prior).fold(ups) { existing =>
+      val keys = table.recordKeyFields
+      // without deletes `ups` is defined (applyChanges requires a side)
+      val scope = if (delKeys.isEmpty && table.isPartitioned)
+        affectedPartitions(existing, ups.get, table) else existing
+      val batchKeys = (ups.map(_.select(keys.map(col): _*)) ++ delKeys).reduce(_ union _)
+      val survivors = scope.join(batchKeys, keys, "left_anti")
+      Some(ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true)))
     }
+    rewrite(spark, table, prior, commit, rows, whole = delKeys.isDefined)
+  }
 
-  /** The rows of `existing` in the partitions `batch` touches. Its distinct
-    * partition tuples are small; as a STATIC disjunction they prune at scan
-    * PLANNING time, where a runtime semi join would scan the whole table.
-    * Above the cap (near-unpartitioned layouts) the broadcast semi join is
-    * the safer plan. */
+  /** The rows of `existing` in the partitions `batch` touches: a STATIC
+    * disjunction of its few partition tuples prunes at scan PLANNING time,
+    * where a runtime semi join would scan the whole table; above the cap
+    * (near-unpartitioned layouts) a broadcast semi join is the safer plan. */
   private def affectedPartitions(existing: DataFrame, batch: DataFrame,
                                  table: LakeTable): DataFrame = {
     val parts = batch.select(table.partitionFields.map(col): _*).distinct()
@@ -201,53 +307,45 @@ object MergeWriter {
     } else existing.join(broadcast(parts), table.partitionFields, "left_semi")
   }
 
-  /** The one table rewrite (COW commits, compaction, clustering): `df`,
-    * materialized first as a lineage barrier, replaces the partitions it
-    * holds rows for — or with `whole` the entire table. The dynamic
-    * overwrite swaps in each partition that received rows at job commit;
-    * one that received none keeps its old files, so with `whole` those
-    * partitions are deleted after the job commits (the data directory too
-    * when none is left), before the caller writes its commit marker. */
-  private[sink] def rewrite(spark: SparkSession, table: LakeTable, df: DataFrame,
-                            whole: Boolean): Unit = {
-    val before = if (whole && table.isPartitioned) dataFiles(spark, table) else Set.empty[String]
-    partitionedWriter(df.localCheckpoint(true), table)
-      .mode(SaveMode.Overwrite).parquet(dataPath(table))
-    if (before.nonEmpty) {
-      // an old file that survived the swap lies in a partition df left empty
-      val after = dataFiles(spark, table)
-      val stale = after.intersect(before)
-      val root = new org.apache.hadoop.fs.Path(dataPath(table))
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (stale == after) fs.delete(root, true)
-      else stale.map(f => new org.apache.hadoop.fs.Path(f).getParent)
-        .foreach(fs.delete(_, true))
-    }
+  /** The one table rewrite: `rows` land as new base files, replacing every
+    * prior file of a directory they were written to — with `whole`, every
+    * prior file (MOR log included). */
+  private def rewrite(spark: SparkSession, table: LakeTable, prior: Snapshot,
+                      commit: Long, rows: Option[DataFrame], whole: Boolean): Unit =
+    publish(spark, table, prior, commit)(rows.foreach(writeBase(_, table))) { added =>
+      val dirs = added.map(e => parents(e.rel).head).toSet
+      if (whole) Nil else prior.entries.filterNot(e => dirs(parents(e.rel).head))
+    }: Unit
+
+  /** Rewrite the current view through `f`, keeping the data commit
+    * (compaction, clustering); a table without files is left alone. */
+  private[sink] def rewriteView(spark: SparkSession, table: LakeTable)(
+                                f: DataFrame => DataFrame): Unit = {
+    val prior = snapshot(spark, table)
+    if (prior.entries.nonEmpty)
+      rewrite(spark, table, prior, prior.commit, Some(f(view(spark, table, prior, Long.MaxValue))),
+        whole = true)
   }
 
-  /** File-slice COW upsert — the Hudi BLOOM-index write path
-    * (`hoodie.index.type=BLOOM`): instead of rewriting every affected
-    * PARTITION, rewrite only the FILES whose bloom might contain one of the
-    * batch's keys. At 100 TB with clustered keys this is the difference
-    * between a partition-sized and a batch-sized write amplification.
-    *
-    * Sequence: prune touched files via the distributed bloom probe
-    * (batch keys never reach the driver), merge the batch with ONLY those
-    * files, append the merged slices as new files, then delete the obsolete
-    * ones, then mark the commit, then maintain the index incrementally
-    * (bloom the new files only). New slices land before old ones go, so a
-    * crash mid-write leaves duplicates — detectable as data files newer
-    * than the last commit marker — never lost rows.
-    *
-    * Falls back to the partition-pruned [[upsert]] when the table or bloom
-    * index is missing/stale, or when the batch evolves the schema (an
-    * untouched file cannot learn a new column). */
+  /** File-slice COW upsert — the Hudi BLOOM-index write path: rewrite only
+    * the FILES whose bloom might hold a batch key (found by a distributed
+    * probe), not every affected partition — batch-sized, not
+    * partition-sized, write amplification. The merged slices replace the
+    * touched files in one published version, then the index blooms the new
+    * files only. The old slices go only after the publish, so a crash
+    * leaves the old snapshot, never duplicates or lost rows. The index is
+    * an accelerator: failing to upkeep it after the commit leaves it stale
+    * (the next call rebuilds it) unreported.
+    * Falls back to [[upsert]] when the table or index is missing/stale or
+    * the batch evolves the schema (an untouched file cannot learn a new
+    * column). */
   def upsertIndexed(spark: SparkSession, batch: DataFrame, table: LakeTable,
                     expectedKeysPerFile: Int = 100000, fpp: Double = 0.01): Unit = {
     require(table.tableType != LakeTable.MergeOnRead,
       "upsertIndexed is the COW write path; MOR appends delta logs already")
     val deduped = dedupByPrecombine(batch, table.recordKeyFields, table.precombineField)
-    val base = readBase(spark, table)
+    val prior = snapshot(spark, table)
+    val base = readBase(spark, table, prior)
     val metaCols = Set(CommitTimeCol, RecordKeyCol)
     val schemaStable = base.exists(b =>
       (b.columns.toSet -- metaCols) == stampMeta(deduped, table, 0L).columns.toSet -- metaCols)
@@ -256,153 +354,92 @@ object MergeWriter {
       // so the NEXT batch takes the file-slice path — the index stays in
       // sync as a side effect of writing, like Hudi's
       upsert(spark, batch, table)
-      BloomIndex.rebuild(spark, table, expectedKeysPerFile, fpp)
+      scala.util.Try(BloomIndex.rebuild(spark, table, expectedKeysPerFile, fpp))
       return
     }
     val keyDf = deduped.select(BloomIndex.keyExpr(table).as("_key"))
     val touched = BloomIndex.pruneFilesForKeyDf(spark, table, keyDf)
-    val commit = nextCommit(spark, table)
+    val root = fsOf(spark, table).makeQualified(new Path(table.path)).toUri.getPath
+    val touchedRels = touched.map(f =>
+      new Path(new java.net.URI(f)).toUri.getPath.stripPrefix(s"$root/")).toSet
+    val commit = prior.commit + 1L
     val stamped = stampMeta(deduped, table, commit)
-    val before = dataFiles(spark, table)
-    val slices = if (touched.isEmpty) stamped else mergeBatch(
-      spark.read.option("basePath", dataPath(table)).parquet(touched: _*),
-      stamped, table.recordKeyFields)
-    // append reads the touched files while writing NEW part files — no
-    // input is overwritten, so no lineage barrier is needed here
-    partitionedWriter(slices, table).mode(SaveMode.Append).parquet(dataPath(table))
-    val fs = new org.apache.hadoop.fs.Path(dataPath(table))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    writeCommitMarker(spark, table, commit)
-    val added = (dataFiles(spark, table) -- before).toSeq
-    BloomIndex.maintain(spark, table, added, touched, expectedKeysPerFile, fpp)
-  }
-
-  /** All data files of the table (normalized absolute paths), recursive
-    * over partition directories. Driver-side listing — the same cardinality
-    * every scan's file index handles. */
-  private def dataFiles(spark: SparkSession, table: LakeTable): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(dataPath(table))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Set.empty
-    else {
-      val it = fs.listFiles(root, true)
-      val out = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f.getPath.toUri.getPath
-      }
-      out.result()
-    }
-  }
-
-  private def partitionedWriter(df: DataFrame, table: LakeTable) = {
-    val w = df.write
-    if (table.isPartitioned)
-      // per-write option, NOT session config: overwrite must only replace
-      // the partitions present in the frame regardless of how the caller's
-      // session is configured — static mode would silently drop every
-      // untouched partition of the table
-      w.partitionBy(table.partitionFields: _*)
-        .option("partitionOverwriteMode", "dynamic")
-    else w
+    val slices = if (touched.isEmpty) stamped
+      else mergeBatch(readFiles(spark, table, touched), stamped, table.recordKeyFields)
+    val added = publish(spark, table, prior, commit)(writeBase(slices, table))(
+      _ => prior.entries.filterNot(e => touchedRels(e.rel)))
+    scala.util.Try(BloomIndex.maintain(spark, table,
+      added.map(e => new Path(table.path, e.rel).toString), touched, expectedKeysPerFile, fpp))
   }
 
   // ---------------------------------------------------------------- read
 
-  private def dataPath(table: LakeTable): String = s"${table.path}/data"
+  private def dataPath(table: LakeTable): String = s"${table.path}/$DataDir"
 
-  private def readBase(spark: SparkSession, table: LakeTable): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dataPath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dataPath(table))) else None
+  /** Base `files` (absolute), partition columns from their directories. */
+  private[sink] def readFiles(spark: SparkSession, table: LakeTable,
+                              files: Seq[String]): DataFrame =
+    spark.read.option("basePath", dataPath(table)).parquet(files: _*)
+
+  private def readBase(spark: SparkSession, table: LakeTable,
+                       snap: Snapshot): Option[DataFrame] =
+    Option.when(snap.base.nonEmpty)(
+      readFiles(spark, table, snap.base.map(e => new Path(table.path, e.rel).toString)))
+
+  /** The current manifest version (0 = none; compaction and clustering
+    * advance it, unlike [[latestCommit]]) and its base files as absolute
+    * paths — what the side indexes build from and record. */
+  private[sink] def baseFiles(spark: SparkSession, table: LakeTable): (Long, Seq[String]) = {
+    val snap = snapshot(spark, table)
+    (snap.version, snap.base.map(e => new Path(table.path, e.rel).toString))
   }
 
-  /** MOR delta-log commits (directory listing under `_delta/`). */
-  private def listCommits(spark: SparkSession, table: LakeTable): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"${table.path}/_delta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("commit=")).map(_.stripPrefix("commit=").toLong).sorted
-  }
-
-  /** Commit timeline markers (`_commits/<n>`), written by every write op on
-    * both table types. They survive MOR compaction (which clears `_delta/`),
-    * keeping the commit counter monotonic — the analog of Hudi's
-    * `.hoodie/` timeline instants. */
-  private def listMarkers(spark: SparkSession, table: LakeTable): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"${table.path}/_commits")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
-  }
-
-  private def writeCommitMarker(spark: SparkSession, table: LakeTable, commit: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${table.path}/_commits/$commit")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** Latest commit on the table's timeline (0 = empty table). */
+  /** Latest data commit on the table's timeline (0 = empty table). */
   def latestCommit(spark: SparkSession, table: LakeTable): Long =
-    (listCommits(spark, table) ++ listMarkers(spark, table))
-      .foldLeft(0L)(math.max)
-
-  private def nextCommit(spark: SparkSession, table: LakeTable): Long =
-    latestCommit(spark, table) + 1L
+    snapshot(spark, table).commit
 
   /** Snapshot view: base ∪ delta logs with key conflicts resolved in
     * [[logOrder]] and tombstones applied. For COW tables this is the base. */
   def readView(spark: SparkSession, table: LakeTable): DataFrame =
-    readViewUpTo(spark, table, Long.MaxValue)
+    view(spark, table, snapshot(spark, table), Long.MaxValue)
 
-  /** Time travel (MERGE_ON_READ): the snapshot as of `commit` — base plus
-    * delta commits ≤ `commit`. Valid for the still-uncompacted part of the
-    * timeline (compaction folds logs into the base, like Hudi after its
-    * retained-commit horizon). On COPY_ON_WRITE the base is the only
-    * snapshot, so this returns it unchanged. */
+  /** MOR time travel: base plus delta commits ≤ `commit` (the uncompacted
+    * part of the timeline; compaction folds logs into the base, like Hudi
+    * after its retained-commit horizon). On COPY_ON_WRITE this is the base. */
   def readAsOf(spark: SparkSession, table: LakeTable, commit: Long): DataFrame =
-    readViewUpTo(spark, table, commit)
+    view(spark, table, snapshot(spark, table), commit)
 
-  /** The MOR delta log of `commits` as ONE relation, for every log reader.
-    * A tombstone-only commit carries just the keys and `_graft_deleted`,
-    * so the read merges schemas — else Spark takes one file's schema and
-    * the payload or the flag vanishes from the whole chain.
-    * `_graft_deleted` is false on payload rows. */
+  /** The MOR log `files` as ONE relation. Schemas merge: a tombstone-only
+    * commit carries just the keys and `_graft_deleted`, and without the
+    * merge Spark takes one file's schema, so the payload or the flag would
+    * vanish from the whole chain. `_graft_deleted` is false on payload. */
   private def readLog(spark: SparkSession, table: LakeTable,
-                      commits: Seq[Long]): DataFrame = {
+                      files: Seq[ManifestEntry]): DataFrame = {
     val logs = spark.read
-      .option("basePath", s"${table.path}/_delta")
+      .option("basePath", s"${table.path}/$DeltaDir")
       .option("mergeSchema", "true")
-      .parquet(commits.map(c => s"${table.path}/_delta/commit=$c"): _*)
+      .parquet(files.map(e => new Path(table.path, e.rel).toString): _*)
     logs.withColumn(DeletedCol,
       if (logs.columns.contains(DeletedCol)) coalesce(col(DeletedCol), lit(false))
       else lit(false))
   }
 
-  /** Election order of delta-log rows: later commit first; within one
-    * commit a payload row above a tombstone, so an upsert wins a key the
-    * same commit also deletes; then precombine and the stringified
-    * payload as tie-breaks. */
+  /** Log election order: later commit, then a payload row above a
+    * tombstone (an upsert wins a key its commit also deletes), then
+    * precombine and the stringified payload. */
   private def logOrder(table: LakeTable, payloadCols: Seq[String]): Seq[Column] =
     col("commit") +: not(col(DeletedCol)) +: precombineOrder(table.precombineField,
       payloadCols.filterNot(table.recordKeyFields.contains))
 
-  /** Snapshot resolution, shaped for 100 TB: conflicts are resolved with
-    * [[latestByKey]] over the DELTA LOG ONLY (in [[logOrder]] — a log
-    * record always supersedes the base, so the base never needs to enter
-    * the shuffle), and base rows merely anti-join the distinct delta keys
-    * (broadcastable while the uncompacted log is small — exactly the
-    * window Hudi keeps MOR logs in). Read cost is O(base scan) + O(delta
-    * shuffle), not O(table shuffle). */
-  private def readViewUpTo(spark: SparkSession, table: LakeTable, upTo: Long): DataFrame = {
-    val base = readBase(spark, table)
-    if (table.tableType != LakeTable.MergeOnRead)
-      return base.getOrElse(spark.emptyDataFrame)
-    val commits = listCommits(spark, table).filter(_ <= upTo)
+  /** Snapshot resolution: [[latestByKey]] over the DELTA LOG ONLY (a log
+    * record supersedes the base, so the base never enters the shuffle),
+    * base rows anti-join the distinct delta keys (broadcastable while the
+    * uncompacted log is small) — O(base scan) + O(delta shuffle), not
+    * O(table shuffle). */
+  private def view(spark: SparkSession, table: LakeTable, snap: Snapshot,
+                   upTo: Long): DataFrame = {
+    val base = readBase(spark, table, snap)
+    val commits = snap.log(_ <= upTo)
     if (commits.isEmpty) return base.getOrElse(spark.emptyDataFrame)
     val logs = readLog(spark, table, commits)
     val schemaCols: Seq[String] =
@@ -428,19 +465,14 @@ object MergeWriter {
     }
   }
 
-  /** Incremental query (Hudi incremental pull): the latest state of every
-    * record changed AFTER `sinceCommit`, stamped with its commit number in
-    * `_graft_commit_time`.
-    *
-    *  - MERGE_ON_READ: resolved from delta commits > `sinceCommit` only —
-    *    reads O(changed data), never the base. Tombstoned keys are excluded.
-    *  - COPY_ON_WRITE: requires `metaFields` — the per-record commit stamp
-    *    is filtered directly, exactly how Hudi filters
-    *    `_hoodie_commit_time > begin.instanttime`.
-    */
+  /** Hudi incremental pull: the latest state of every record changed
+    * AFTER `sinceCommit`, with its commit in `_graft_commit_time`. MOR
+    * reads only the delta commits after it (tombstoned keys excluded); COW
+    * needs `metaFields` and filters the per-record commit stamp. */
   def incremental(spark: SparkSession, table: LakeTable, sinceCommit: Long): DataFrame = {
+    val snap = snapshot(spark, table)
     if (table.tableType == LakeTable.MergeOnRead) {
-      val commits = listCommits(spark, table).filter(_ > sinceCommit)
+      val commits = snap.log(_ > sinceCommit)
       if (commits.isEmpty) return spark.emptyDataFrame
       val logs = readLog(spark, table, commits)
       val schemaCols: Seq[String] = logs.columns.toSeq.filterNot(c =>
@@ -452,19 +484,15 @@ object MergeWriter {
       require(table.metaFields,
         s"incremental on COPY_ON_WRITE requires metaFields " +
           s"(${LakeTable.MetaFieldsKey}=true) so records carry $CommitTimeCol")
-      readBase(spark, table)
+      readBase(spark, table, snap)
         .map(_.filter(col(CommitTimeCol) > sinceCommit))
         .getOrElse(spark.emptyDataFrame)
     }
   }
 
-  /** MOR compaction: fold all delta commits into the base with one
-    * whole-table [[rewrite]] of the snapshot, then clear the log. A
-    * partition whose rows were all deleted disappears with its files. */
+  /** MOR compaction: fold the log into the base with one whole-table
+    * [[rewrite]] of the view, keeping [[latestCommit]]. */
   def compact(spark: SparkSession, table: LakeTable): Unit =
-    if (table.tableType == LakeTable.MergeOnRead && listCommits(spark, table).nonEmpty) {
-      rewrite(spark, table, readView(spark, table), whole = true)
-      val p = new org.apache.hadoop.fs.Path(s"${table.path}/_delta")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
-    }
+    if (table.tableType == LakeTable.MergeOnRead &&
+        snapshot(spark, table).log(_ => true).nonEmpty) rewriteView(spark, table)(identity)
 }

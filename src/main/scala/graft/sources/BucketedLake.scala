@@ -764,15 +764,27 @@ object BucketedLake {
       Seq(s"#end\t${if (pqPlan.isDefined) 0 else outEntries.size}"))
       .mkString("", "\n", "\n").getBytes(UTF_8))
     finally out.close()
-    flipPointer(spark, fs, path, next)
+    try flipPointer(spark, fs, path, next)
+    catch { case e: Exception =>
+      // a manifest above a pointer that never reached it would fail every
+      // later commit's create-exclusive: the writer that made it (and no
+      // other, so a foreign writer's in-flight manifest is never touched)
+      // removes it. A process that dies here leaves it to repair()
+      if (!scala.util.Try(currentVersion(spark, path)).toOption.flatten.contains(next)) {
+        (vp +: pqPlan.toSeq.map(new Path(path, _)))
+          .foreach(p => scala.util.Try(fs.delete(p, false)))
+        throw e
+      }
+    }
     val readback = currentVersion(spark, path)
     if (readback.forall(_ < next)) throw new ConcurrentCommitException(
       s"commit pointer readback mismatch at $path: wrote v$next, " +
         s"read ${readback.fold("nothing")(v => s"v$v")} — a concurrent " +
         "writer raced the flip", null)
     // the legacy single-file manifest is superseded; leaving it behind
-    // would resurrect a stale view if the pointer were ever lost
-    fs.delete(new Path(path, ManifestFile), false): Unit
+    // would resurrect a stale view if the pointer were ever lost. The
+    // commit has landed, so a failed delete must not report it as failed
+    scala.util.Try(fs.delete(new Path(path, ManifestFile), false)): Unit
     next
   }
 
@@ -798,7 +810,8 @@ object BucketedLake {
       case _: Exception =>
         val out2 = fs.create(ptr, true)
         try out2.write(next.toString.getBytes(UTF_8)) finally out2.close()
-        fs.delete(tmp, false): Unit
+        // flipped: a leftover temp file is harmless, a thrown commit is not
+        scala.util.Try(fs.delete(tmp, false)): Unit
     }
   }
 

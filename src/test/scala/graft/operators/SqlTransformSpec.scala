@@ -29,6 +29,16 @@ class SqlTransformSpec extends SparkSuite {
     assert(out.as[String].head() === "xY")
   }
 
+  test("SQL that fails analysis leaves no temp view behind") {
+    val df = Seq((1, "a")).toDF("id", "tag")
+    def views = spark.catalog.listTables().collect()
+      .count(_.name.toUpperCase.startsWith("GRAFT_SRC_TMP_TABLE_"))
+    val before = views
+    intercept[org.apache.spark.sql.AnalysisException](
+      SqlTransform.transform(spark, df, "SELECT no_such_col FROM <SRC>"))
+    assert(views === before)
+  }
+
   test("maybeTransform gates on the reference key, Mongo semantics (run iff set)") {
     val df = Seq((1, "a")).toDF("id", "tag")
     val none = SqlTransform.maybeTransform(spark, df, ConfigLayer.empty)

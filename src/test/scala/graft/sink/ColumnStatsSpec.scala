@@ -96,6 +96,18 @@ class ColumnStatsSpec extends SparkSuite {
     assert(again === Seq(9999L))
   }
 
+  test("clustering stales the index: it rewrites files without a new data commit") {
+    val t = clusteredTable()
+    assert(ColumnStats.isFresh(spark, t))
+    val commit = MergeWriter.latestCommit(spark, t)
+    Clustering.cluster(spark, t, Seq("id"), numFiles = 3)
+    assert(MergeWriter.latestCommit(spark, t) === commit)
+    assert(!ColumnStats.isFresh(spark, t))
+    // the stale index falls back to the scan of the clustered files
+    assert(ColumnStats.read(spark, t, Seq(ColumnRange("v", Some(0L), Some(9L))))
+      .select("v").as[Long].collect().toSet === (0L to 9L).toSet)
+  }
+
   test("all-null files are skipped for range bounds (range never matches null)") {
     val t = LakeTable(tmp(), "t", Seq("id"), "ver")
     MergeWriter.append(Seq((1L, Some(10L), 1L), (2L, Some(20L), 1L))

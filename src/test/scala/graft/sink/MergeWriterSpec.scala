@@ -1,6 +1,8 @@
 package graft.sink
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -206,6 +208,70 @@ class MergeWriterSpec extends SparkSuite {
       "compact" -> { MergeWriter.compact(spark, t); ids(MergeWriter.readView(spark, t)) })
     assert(seen === Seq("readView" -> live, "readAsOf" -> live, "compact" -> live))
     assert(readAll(t) === Set((2L, "b2", 2L, "p"), (3L, "c", 1L, "p")))
+  }
+
+  test("a failed two-sided commit keeps the old snapshot; its replay commits") {
+    FaultFs.register(spark)
+    val t = cow(FaultFs.path(tmp()))
+    val rows = (1L to 1000L).map(i => (i, s"v$i", 1L, "p"))
+    MergeWriter.upsert(spark, batch(rows: _*), t)
+    val ups = batch((5L, "new", 2L, "p"))
+    val dels = Seq(7L).toDF("id")
+    // the first part file the commit creates fails
+    val fault = FaultFs.arm(1, (op, p) => op == "create" && p.getName.startsWith("part-"))
+    try intercept[Exception](MergeWriter.applyChanges(spark, t, Some(ups), Some(dels)))
+    finally fault.disarm()
+    assert(readAll(t) === rows.toSet)
+    assert(MergeWriter.latestCommit(spark, t) === 1L)
+    MergeWriter.applyChanges(spark, t, Some(ups), Some(dels))
+    val expected = rows.collect {
+      case (5L, _, _, dt) => (5L, "new", 2L, dt)
+      case r if r._1 != 7L => r
+    }
+    assert(expected.size === 999)
+    assert(readAll(t) === expected.toSet)
+    assert(MergeWriter.latestCommit(spark, t) === 2L)
+  }
+
+  test("a table written before published versions reads as before; its next commit adopts it") {
+    def markers(path: String, n: Int): Unit = (1 to n).foreach(i =>
+      Files.createFile(Files.createDirectories(Path.of(path, "_commits"))
+        .resolve(i.toString)))
+    def live(path: String): Set[String] =
+      graft.sources.BucketedLake.readManifestFull(spark, path).get.entries.map(_.rel).toSet
+    def onDisk(path: String): Set[String] = Seq("data", "_delta").map(Path.of(path, _))
+      .filter(Files.exists(_)).flatMap(Files.walk(_).iterator.asScala
+        .filter(_.toString.endsWith(".parquet")).map(Path.of(path).relativize(_).toString)).toSet
+
+    // COW, the old layout: base files under data/, one marker per commit
+    val c = cow(tmp(), partitioned = true)
+    batch((1, "a", 1, "p"), (2, "b", 1, "q")).write.partitionBy("dt").parquet(s"${c.path}/data")
+    markers(c.path, 2)
+    assert(readAll(c) === Set((1L, "a", 1L, "p"), (2L, "b", 1L, "q")))
+    assert(MergeWriter.latestCommit(spark, c) === 2L)
+    MergeWriter.upsert(spark, batch((2, "b2", 2, "q")), c)
+    assert(readAll(c) === Set((1L, "a", 1L, "p"), (2L, "b2", 2L, "q")))
+    assert(MergeWriter.latestCommit(spark, c) === 3L)
+    // the untouched partition's old file is adopted, the rewritten one's reclaimed
+    assert(live(c.path).exists(_.startsWith("data/dt=p/")))
+    assert(onDisk(c.path) === live(c.path))
+
+    // MOR: a base, then a payload log and a tombstone log
+    val m = cow(tmp()).copy(tableType = LakeTable.MergeOnRead)
+    batch((1, "a", 1, "p"), (2, "b", 1, "p")).write.parquet(s"${m.path}/data")
+    batch((2, "b2", 2, "p")).write.parquet(s"${m.path}/_delta/commit=2")
+    Seq(1L).toDF("id").withColumn("_graft_deleted", lit(true))
+      .write.parquet(s"${m.path}/_delta/commit=3")
+    markers(m.path, 3)
+    assert(readAll(m) === Set((2L, "b2", 2L, "p")))
+    assert(MergeWriter.latestCommit(spark, m) === 3L)
+    MergeWriter.upsert(spark, batch((3, "c", 1, "p")), m)
+    assert(readAll(m) === Set((2L, "b2", 2L, "p"), (3L, "c", 1L, "p")))
+    assert(MergeWriter.latestCommit(spark, m) === 4L)
+    assert(onDisk(m.path) === live(m.path))
+    MergeWriter.compact(spark, m)
+    assert(readAll(m) === Set((2L, "b2", 2L, "p"), (3L, "c", 1L, "p")))
+    assert(MergeWriter.latestCommit(spark, m) === 4L)
   }
 
   test("later commit wins over higher precombine from an earlier commit") {

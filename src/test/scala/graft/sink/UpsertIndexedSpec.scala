@@ -81,6 +81,24 @@ class UpsertIndexedSpec extends SparkSuite {
     assert(a === b)
   }
 
+  test("clustering between file-slice upserts stales the index; the next upsert stays exact") {
+    val t = build3()
+    val first = Seq((5L, "A", 2L), (150L, "B", 2L)).toDF("id", "v", "ver")
+    MergeWriter.upsertIndexed(spark, first, t, expectedKeysPerFile = 100, fpp = 0.001)
+    assert(BloomIndex.isFresh(spark, t))
+    // clustering rewrites every file but keeps the data commit
+    Clustering.cluster(spark, t, Seq("id"), numFiles = 2)
+    assert(!BloomIndex.isFresh(spark, t))
+    val second = Seq((150L, "C", 3L), (299L, "D", 2L), (600L, "E", 1L)).toDF("id", "v", "ver")
+    MergeWriter.upsertIndexed(spark, second, t, expectedKeysPerFile = 100, fpp = 0.001)
+    // plain-Scala recompute: each batch replaces the rows with its keys
+    val expected = Seq(Seq(5L -> "A", 150L -> "B"), Seq(150L -> "C", 299L -> "D", 600L -> "E"))
+      .foldLeft((0L until 300L).map(i => i -> s"v$i").toMap)(_ ++ _)
+    assert(MergeWriter.readView(spark, t).select("id", "v").as[(Long, String)]
+      .collect().sorted.toSeq === expected.toSeq.sorted)
+    assert(BloomIndex.isFresh(spark, t))
+  }
+
   test("stale index and schema evolution both fall back to plain upsert") {
     val t = build3()
     // make the index stale

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
-import graft.sink.MergeWriter
+import graft.sink.{FaultFs, MergeWriter}
 
 /** W3 — streaming multi-table demux: routing, per-table schema, in-batch
   * conflict resolution, delete ops, path templating, checkpointed resume
@@ -181,6 +182,41 @@ class MultiTableSinkSpec extends SparkSuite {
     // with the spec fixed, replaying the batch lands every table
     sink.processBatch(batch, 0)
     tables.foreach(t => assert(readTable(root, t) === expected(evs, t), t))
+  }
+
+  test("streaming: a table's commit fails on a filesystem fault; the replayed batch recovers it") {
+    FaultFs.register(spark)
+    val root = Files.createTempDirectory("graft-cdc7").toString
+    val inDir = Files.createTempDirectory("graft-cdc7-in").toString
+    val ckpt = Files.createTempDirectory("graft-cdc7-ckpt").toString
+    val sink = new MultiTableSink(FaultFs.path(s"$root/{db}/ods_{db}_{table}"), specs(), 1)
+    val lakes = specs().map(sink.resolveLakeTable)
+    def snapshots = lakes.map(t => MergeWriter.readView(spark, t).select("id", "v", "ver")
+      .as[(Long, String, Long)].collect().toSet)
+    def commits = lakes.map(MergeWriter.latestCommit(spark, _))
+    def run(): Unit = {
+      val q = sink.start(CdcSource.fileStream(spark, inDir), ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    val first = Seq(Ev("person", "insert", 1, 1, "a", 1), Ev("person", "insert", 2, 2, "b", 1),
+      Ev("student", "insert", 3, 10, "s", 1))
+    Files.writeString(java.nio.file.Path.of(inDir, "b1.json"), first.map(_.json).mkString("\n"))
+    run()
+    val before = commits
+    val second = Seq(Ev("person", "update", 4, 1, "a2", 2), Ev("person", "delete", 5, 2, "x", 2),
+      Ev("student", "insert", 6, 11, "t", 1))
+    Files.writeString(java.nio.file.Path.of(inDir, "b2.json"), second.map(_.json).mkString("\n"))
+    // person's first part file of the batch fails; student commits
+    val fault = FaultFs.arm(1, (op, p) => op == "create" && p.getName.startsWith("part-") &&
+      p.toString.contains("ods_db1_person"))
+    try intercept[StreamingQueryException](run()) finally fault.disarm()
+    assert(snapshots === Seq(expected(first, "person"), expected(first ++ second, "student")))
+    val failed = commits
+    assert(failed === Seq(before.head, before(1) + 1))
+    // the restarted query replays the batch: each table commits once more
+    run()
+    assert(snapshots === Seq("person", "student").map(expected(first ++ second, _)))
+    assert(commits === failed.map(_ + 1))
   }
 
   test("streaming: each table commits once per batch under the query's job group") {
