@@ -175,8 +175,9 @@ object ScaleProbe {
     }
     // connectedComponents convergence at ccEdges synthetic edges: a mix of
     // long chains (round-count stress: alternating-star needs ~log² depth),
-    // one giant star (degree stress: the min-aggregate formulation must not
-    // build a neighborhood) and random 100-node clusters (the common case).
+    // one giant star (degree stress: its center's neighbors stream through
+    // one sorted task, never held as a list) and random 100-node clusters
+    // (the common case).
     // Reports rounds, per-round surviving edges and total shuffle bytes.
     time(s"cc_${ccEdges}_edges") {
       import spark.implicits._

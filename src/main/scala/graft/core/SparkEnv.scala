@@ -26,9 +26,6 @@ object SparkEnv {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    // dynamic partition overwrite: MergeWriter rewrites only affected
-    // partitions of a lake table (COW semantics at 100 TB scale).
-    "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
     "spark.sql.parquet.datetimeRebaseModeInRead" -> "CORRECTED",
     // TIMESTAMP(NANOS) parquet is unreadable by Spark 4 otherwise — surfaces
     // as an epoch-nano BIGINT column instead

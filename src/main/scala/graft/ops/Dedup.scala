@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** Deduplication operators for LLM training-data pipelines.
   *
@@ -279,86 +280,115 @@ object Dedup {
     *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — the published
-    * shuffle-parallel CC algorithm. Each round is one aggregation + one join,
-    * both keyed on the node id; rounds converge in O(log² n) (in practice a
-    * handful for near-dup graphs, whose components are shallow). Per round:
+    * shuffle-parallel CC algorithm; rounds converge in O(log² n) (in practice
+    * a handful for near-dup graphs, whose components are shallow). Per round:
     *
     *  - large-star: for every node u over the UNDIRECTED neighborhood,
     *    connect each strictly-larger neighbor to m = min(N(u) ∪ u);
     *  - small-star: on the now larger→smaller directed edges, connect each
     *    neighbor and u itself to the minimum neighbor.
     *
-    * At the fixpoint every component is a star rooted at its minimum id, so
-    * the edge list IS the (node → component) mapping.
+    * Physical plan: each star is ONE exchange by node, rows sorted by
+    * (node, neighbor) within a partition, then one streaming pass over each
+    * node's run of rows — the first neighbor is the minimum, duplicates are
+    * adjacent and skipped as they pass, so no aggregate, join or `distinct`
+    * is needed. A round is two shuffles; the small-star of round k and the
+    * large-star of round k+1 run in one job from the checkpointed
+    * large-star output.
     *
-    * 100 TB notes: no step materializes a neighborhood list (min-aggregate +
-    * join only — a high-degree node never builds a collect_list); the edge
-    * set shrinks monotonically toward one edge per non-root node; lineage is
-    * cut every round with an eager localCheckpoint (on a real cluster, set a
-    * checkpoint dir and swap to `.checkpoint()`). Convergence is detected by
-    * an order-insensitive checksum of the edge set (count + id sums), one
-    * tiny aggregate per round.
+    * Fixpoint: the large-star pass also counts nodes with more than one
+    * distinct smaller neighbor, or with both a smaller and a larger one.
+    * None means the graph is a star forest rooted at component minima — the
+    * algorithm's fixpoint — and then that pass's output, (leaf, root) edges
+    * plus a (root, root) pair it emits for every node without a smaller
+    * neighbor, IS the (node, component) answer. The count is an accumulator
+    * updated in the result stage of the checkpoint job, so a retried task
+    * cannot flip it between zero and non-zero; `onRound` gets the same
+    * pass's edge count (at the fixpoint, the number of non-root nodes).
+    *
+    * 100 TB notes: no step materializes a neighborhood list; a hot node's
+    * rows stream through one sorted task in O(1) memory (the sort spills),
+    * where a collect_list would have to hold them; the edge set shrinks
+    * toward one edge per non-root node; lineage is cut every round with an
+    * eager localCheckpoint of the large-star output (on a real cluster, set
+    * a checkpoint dir and swap to `.checkpoint()`).
     *
     * Returns (node, component) for every node appearing in `edges`;
     * component = minimum node id of the component. Singleton docs (no edges)
-    * don't appear — union them in as (id, id) if required. */
+    * don't appear — union them in as (id, id) if required. Self-loops and
+    * edges with a null end carry no connectivity and are dropped. */
   def connectedComponents(edges: DataFrame, srcCol: String = "doc_a",
                           dstCol: String = "doc_b",
                           maxIter: Int = 25,
                           onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val sk = edges.sparkSession
     import sk.implicits._
-    // canonical larger→smaller directed edges; self-loops/dups dropped
-    var e = edges
-      .select(greatest(col(srcCol), col(dstCol)).cast("long").as("u"),
-        least(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter($"u" =!= $"v").distinct()
-      .localCheckpoint(false) // materialized by the signature job below
-    def signature(df: DataFrame): (Long, Long, Long) = {
-      val r = df.agg(count(lit(1)), sum($"u"), sum($"v")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
+    @scala.annotation.tailrec
+    def round(it: Int, und: Dataset[(Long, Long)]): DataFrame = {
+      val edgeCount = sk.sparkContext.longAccumulator("cc.edges")
+      val nonStar = sk.sparkContext.longAccumulator("cc.nonStar")
+      val ls = byNode(und).mapPartitions(largeStar(_, edgeCount, nonStar))
+        .localCheckpoint(true)
+      onRound(it, edgeCount.sum) // convergence observability (ScaleProbe)
+      if (nonStar.sum == 0) ls.toDF("node", "component")
+      else if (it >= maxIter) throw new IllegalStateException(
+        s"connectedComponents did not converge within $maxIter rounds " +
+          "(raise maxIter; alternating star converges in O(log² n))")
+      else round(it + 1, byNode(ls).mapPartitions(smallStar))
     }
-    var sig = signature(e)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      it += 1
-      // large-star
-      val und = e.union(e.select($"v".as("u"), $"u".as("v")))
-      val mins = und.groupBy("u").agg(min($"v").as("mn"))
-        .select($"u", least($"u", $"mn").as("m"))
-      // no distinct here: duplicate (v, m) edges don't affect the min
-      // aggregate below and the round's final distinct dedups anyway —
-      // skipping it saves one full shuffle per round
-      val ls = und.join(mins, "u").filter($"v" > $"u")
-        .select($"v".as("u"), $"m".as("v"))
-        .filter($"u" =!= $"v")
-      // small-star (ls edges already point larger → smaller)
-      val sMins = ls.groupBy("u").agg(min($"v").as("m"))
-      val next = ls.join(sMins, "u").filter($"v" =!= $"m")
-        .select($"v".as("u"), $"m".as("v"))
-        .union(sMins.select($"u", $"m".as("v")))
-        .filter($"u" =!= $"v").distinct()
-        .localCheckpoint(false) // materialized by the signature job below
-      val nextSig = signature(next)
-      onRound(it, nextSig._1) // convergence observability (ScaleProbe)
-      // the checksum is a fast filter, not proof: two DIFFERENT edge sets
-      // can share (count, Σu, Σv) — e.g. {(5,1),(3,2)} vs {(4,1),(4,2)} —
-      // so an apparent fixpoint is confirmed with an exact set compare
-      // (one extra job at convergence only, never per round)
-      val same = nextSig == sig && next.exceptAll(e).isEmpty
-      e = next
-      if (same) converged = true else sig = nextSig
+    round(1, edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+      .na.drop().as[(Long, Long)]
+      .flatMap { case (a, b) => if (a == b) Nil else Seq((a, b), (b, a)) })
+  }
+
+  /** Edges exchanged by their first node and sorted by (node, neighbor):
+    * each node's neighbors arrive as one ascending run. */
+  private def byNode(e: Dataset[(Long, Long)]): Dataset[(Long, Long)] =
+    e.repartition(col("_1")).sortWithinPartitions("_1", "_2")
+
+  /** A [[byNode]] partition without duplicate edges, each edge flagged when
+    * it opens its node's run (its neighbor is then the node's minimum). */
+  private def runs(rows: Iterator[(Long, Long)]): Iterator[(Long, Long, Boolean)] = {
+    var started = false
+    var node, prev = 0L
+    rows.flatMap { case (a, b) =>
+      val fresh = !started || a != node
+      if (!fresh && b == prev) None
+      else { started = true; node = a; prev = b; Some((a, b, fresh)) }
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds " +
-        "(raise maxIter; alternating star converges in O(log² n))")
-    // fixpoint edges are (node, root); roots map to themselves
-    e.select($"u".as("node"), $"v".as("component"))
-      .union(e.select($"v".as("node"), $"v".as("component")))
-      .distinct()
+  }
+
+  /** Large-star over a [[byNode]] partition of undirected edges: (v, m) for
+    * every neighbor v > u, (u, u) for a node with no smaller neighbor. Adds
+    * the emitted non-self edges to `edges` and the nodes that break the
+    * star-forest shape to `nonStar`. */
+  private def largeStar(rows: Iterator[(Long, Long)], edges: LongAccumulator,
+                        nonStar: LongAccumulator): Iterator[(Long, Long)] = {
+    var m, smaller, out, bad = 0L
+    var larger = false
+    def close(): Unit = if (smaller > 1 || smaller == 1 && larger) bad += 1
+    runs(rows).flatMap { case (u, v, fresh) =>
+      if (fresh) { close(); m = math.min(u, v); smaller = 0; larger = false }
+      if (v < u) { smaller += 1; Nil }
+      else {
+        larger = true; out += 1
+        if (fresh) Seq((u, u), (v, u)) else Seq((v, m))
+      }
+    } ++ { // evaluated once the partition is exhausted
+      close(); edges.add(out); nonStar.add(bad); Nil
+    }
+  }
+
+  /** Small-star over a [[byNode]] partition of large-star output, whose
+    * edges point larger → smaller: x and each neighbor connect to x's
+    * minimum neighbor m, emitted in both directions for the next
+    * large-star. A root's (x, x) pair emits nothing. */
+  private def smallStar(rows: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var m = 0L
+    runs(rows).flatMap { case (x, y, fresh) =>
+      if (fresh) m = y
+      if (y == x) Nil else if (fresh) Seq((x, m), (m, x)) else Seq((y, m), (m, y))
+    }
   }
 
   /** Star-shaped duplicate edges from an exact content fingerprint: one edge

@@ -835,7 +835,11 @@ object Similarity {
     val cents = trainCentroidsI8(emb, nlist, iters, idCol, vecCol)
     assignCells(emb, cents, idCol, vecCol)
       .select(col("neighbor_id").as(idCol), col("cv").as(vecCol), col("cell_id"))
-      .write.partitionBy("cell_id").mode("overwrite").parquet(s"$path/data")
+      .write.partitionBy("cell_id")
+      // a rebuild replaces every cell, whatever the session's default mode:
+      // a dynamic overwrite would keep cells the new nlist no longer has
+      .option("partitionOverwriteMode", "static")
+      .mode("overwrite").parquet(s"$path/data")
     cents.write.mode("overwrite").parquet(s"$path/_centroids")
   }
 

@@ -84,33 +84,64 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  /** (node, min id of its component) by driver-side union-find with path
+    * compression, over the non-self edges. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  /** connectedComponents(edges) is exactly the union-find labelling, one row
+    * per node; returns the number of rounds it took. */
+  private def assertComponents(edges: Seq[(Long, Long)]): Int = {
+    var rounds = 0
+    val got = graft.ops.Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"),
+        onRound = (r, _) => rounds = r)
+      .as[(Long, Long)].collect()
+    assert(got.map(_._1).distinct.length === got.length, "a node listed twice")
+    assert(got.toMap === unionFind(edges))
+    rounds
+  }
+
   test("connectedComponents == union-find on random graphs") {
     val edgeGen = Gen.listOfN(25,
       Gen.zip(Gen.chooseNum(0L, 15L), Gen.chooseNum(0L, 15L)))
     forAll(edgeGen, n = 5) { edges =>
-      val real = edges.filter { case (a, b) => a != b }
-      if (real.nonEmpty) {
-        // reference: driver-side union-find with path compression
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        real.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val expected = parent.keys.map(x => x -> find(x)).toMap
-        // min-id canonical labels
-        val canon = expected.groupBy(_._2).flatMap { case (_, m) =>
-          val mn = m.keys.min; m.keys.map(_ -> mn)
-        }
-        val got = graft.ops.Dedup.connectedComponents(
-            real.toDF("doc_a", "doc_b"))
-          .as[(Long, Long)].collect().toMap
-        assert(got === canon)
-      }
+      if (edges.exists { case (a, b) => a != b }) assertComponents(edges)
     }
+  }
+
+  test("connectedComponents == union-find with duplicate, reversed and self-loop edges") {
+    val edgeGen = Gen.listOfN(20,
+      Gen.zip(Gen.chooseNum(0L, 30L), Gen.chooseNum(0L, 30L)))
+    forAll(edgeGen, n = 5) { edges =>
+      val noisy = edges ++ edges.take(5) ++ edges.take(7).map(_.swap) ++
+        Seq((3L, 3L), (40L, 40L)) // 40 only has a self-loop: no component
+      assertComponents(noisy)
+    }
+  }
+
+  test("connectedComponents on an 80-node path with shuffled ids needs several rounds") {
+    val rnd = new scala.util.Random(7)
+    val ids = rnd.shuffle((0L until 80L).map(_ * 13 + 5))
+    val path = ids.zip(ids.tail)
+    val rounds = assertComponents(rnd.shuffle(path))
+    assert(rounds >= 3, s"a long path converged in $rounds rounds")
+  }
+
+  test("connectedComponents on a star beside isolated pairs") {
+    // the center is neither the smallest nor the largest id of its star
+    val star = Seq(1L, 4L, 9L, 30L, 31L, 77L).map(leaf => (20L, leaf))
+    val pairs = Seq((100L, 101L), (103L, 102L), (2L, 200L))
+    assertComponents(star ++ pairs)
   }
 
   test("fix_mojibake(mojibake(s)) == s for ANY unicode string; clean text untouched") {

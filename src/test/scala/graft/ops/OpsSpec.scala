@@ -893,6 +893,24 @@ class OpsSpec extends SparkSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("cell_id"))
   }
 
+  test("IVF index rebuilt with a smaller nlist holds each vector once") {
+    val emb = (0L until 40L).map(i => (i, Array.tabulate(16)(d =>
+      math.sin((i * 37 + d) * 1.3).toFloat))).toDF("vec_id", "embedding")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val mode = spark.conf.get(key)
+    // the rebuild must not depend on the session's overwrite mode
+    for (sessionMode <- Seq("static", "dynamic")) {
+      val path = java.nio.file.Files.createTempDirectory("graft-ivf-rebuild").toString
+      spark.conf.set(key, sessionMode)
+      try {
+        Similarity.writeIvfIndex(emb, path, nlist = 16, iters = 1)
+        Similarity.writeIvfIndex(emb, path, nlist = 4, iters = 1)
+      } finally spark.conf.set(key, mode)
+      val ids = spark.read.parquet(s"$path/data").select("vec_id").as[Long].collect()
+      assert(ids.sorted.toSeq === (0L until 40L), s"session mode $sessionMode")
+    }
+  }
+
   test("IVF index rebuild is byte-identical: at-rest centroids are " +
       "plan-order-independent (trainCentroidsI8)") {
     val emb = (0L until 40L).map(i => (i, Array.tabulate(16)(d =>
@@ -1141,6 +1159,53 @@ class OpsSpec extends SparkSuite {
     val empty = Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(empty.count() === 0L)
+  }
+
+  test("connectedComponents fails with a clear error past maxIter") {
+    val path = (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(path, maxIter = 1)
+    }
+    assert(e.getMessage === "connectedComponents did not converge within 1 rounds " +
+      "(raise maxIter; alternating star converges in O(log² n))")
+  }
+
+  /** Spark jobs started while `body` runs, and its result. */
+  private def countingJobs[T](body: => T): (Int, T) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Thread.sleep(500) // let the listener bus drain
+      (jobs.get(), out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("connectedComponents plan shape: jobs per graph, rounds and edge counts") {
+    def run(edges: Seq[(Long, Long)]) = countingJobs {
+      val rounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+      val cc = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"),
+        onRound = (r, n) => rounds += ((r, n)))
+      (cc, rounds.toList)
+    }
+    // a star forest rooted at its minima is the fixpoint: one pass
+    val forest = Seq((1L, 2L), (1L, 3L), (1L, 5L), (10L, 11L), (10L, 12L))
+    val (forestJobs, (forestCc, forestRounds)) = run(forest)
+    assert(forestJobs <= 2, s"a star forest took $forestJobs jobs")
+    assert(forestRounds === List((1, 5L)))
+    assert(forestCc.as[(Long, Long)].collect().toMap === Map(
+      1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
+    // a~b~c: one round to a star, one to see it is the fixpoint
+    val (chainJobs, (chainCc, chainRounds)) = run(Seq((1L, 2L), (2L, 3L)))
+    assert(chainJobs <= 5, s"the chain a~b~c took $chainJobs jobs")
+    assert(chainRounds.map(_._1) === (1 to chainRounds.length).toList)
+    assert(chainRounds.last._2 === 2L) // non-root nodes: b and c
+    assert(chainCc.as[(Long, Long)].collect().toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("fingerprintEdges emits linear star edges (group-min target)") {
