@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.core.{ConfigLayer, SparkEnv}
 import graft.operators.{Flatten, SqlTransform}
-import graft.sink.{CatalogSync, LakeTable, MergeWriter}
+import graft.sink.{BloomIndex, CatalogSync, LakeTable, MergeWriter}
 
 /** Shared CLI + pipeline harness for the batch importers — the reference
   * repeats this shape in all four boxers (read → [flatten] → [SQL
@@ -92,13 +92,16 @@ abstract class BatchImportApp {
       case Some(n) => transformed.repartition(n, table.recordKeyFields.map(col): _*)
       case None => transformed
     }
-    // hoodie.index.type=BLOOM (the public Hudi key): route a COW upsert
-    // through the file-slice path — batch-sized write amplification
-    val bloomIndexed = operation == MergeWriter.Upsert &&
-      table.tableType == LakeTable.CopyOnWrite &&
-      conf.getOrElse("hoodie.index.type", "").equalsIgnoreCase("BLOOM")
-    if (bloomIndexed) MergeWriter.upsertIndexed(spark, batch, table)
-    else MergeWriter.write(spark, batch, table, operation)
+    MergeWriter.write(spark, batch, table, operation)
+    // hoodie.index.type=BLOOM (the public Hudi key) keeps the COW key index,
+    // which narrows each commit to the files holding its keys: a commit
+    // maintains a fresh index itself, so only one it left missing or stale
+    // is rebuilt; an index is an accelerator, so a failed rebuild leaves it
+    // stale and the commit stands
+    if (table.tableType == LakeTable.CopyOnWrite &&
+        conf.getOrElse("hoodie.index.type", "").equalsIgnoreCase("BLOOM") &&
+        !BloomIndex.isFresh(spark, table))
+      scala.util.Try(BloomIndex.rebuild(spark, table)): Unit
     CatalogSync.maybeSync(spark, conf, table)
   }
 

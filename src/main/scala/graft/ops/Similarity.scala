@@ -852,7 +852,7 @@ object Similarity {
     * retrain + full [[writeIvfIndex]] periodically, like any IVF system),
     * then only the touched `cell_id=N` partitions are rewritten: their
     * current rows are unioned with the batch (batch wins on `idCol` —
-    * file-slice upsert, same pattern as the lake layer's upsertIndexed)
+    * the lake layer's COW commit, which rewrites only the files it touches)
     * and written back under `partitionOverwriteMode=dynamic`, which
     * replaces exactly the partitions present in the output. A batch
     * touching b ≤ nlist cells costs ~b/nlist of the corpus in IO, not a

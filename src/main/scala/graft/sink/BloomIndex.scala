@@ -1,5 +1,8 @@
 package graft.sink
 
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -17,7 +20,9 @@ import scala.util.hashing.MurmurHash3
   * parquet under `<table>/_index/key_bloom` with the build parameters,
   * stamped (`as_of_commit`) with the manifest version whose files it
   * covers — compaction and clustering publish a version too, so they
-  * stale the index although they keep the data-commit number.
+  * stale the index although they keep the data-commit number. A
+  * COPY_ON_WRITE commit over a fresh index rewrites only the files whose
+  * bloom may hold a batch key and then [[maintain]]s it.
   *
   * Query: for a batch of lookup keys, keep files whose bloom might contain
   * ANY of them — evaluated DISTRIBUTED (index ⋈ broadcast keys + a
@@ -31,7 +36,7 @@ object BloomIndex {
   def indexPath(table: LakeTable): String = s"${table.path}/_index/key_bloom"
 
   private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -101,29 +106,34 @@ object BloomIndex {
     val (version, files) = MergeWriter.baseFiles(spark, table)
     if (files.isEmpty) return
     val (m, k) = sizing(expectedKeysPerFile, fpp)
-    val bloomUdaf = udaf(new BloomAgg(m, k), Encoders.STRING)
-    MergeWriter.readFiles(spark, table, files)
-      .select(col("_metadata.file_path").as("file"), keyExpr(table).as("_key"))
-      .groupBy("file")
-      .agg(bloomUdaf(col("_key")).as("bloom"), count(lit(1)).as("rows"))
-      .withColumn("m_bits", lit(m)).withColumn("k_hashes", lit(k))
+    blooms(spark, table, files, m, k)
       .withColumn("as_of_commit", lit(version))
       .repartition(1)
       .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
   }
 
+  /** One index row per base file of `files`: its key bloom and row count. */
+  private def blooms(spark: SparkSession, table: LakeTable, files: Seq[String],
+                     m: Int, k: Int): DataFrame =
+    MergeWriter.readFiles(spark, table, files)
+      .select(col("_metadata.file_path").as("file"), keyExpr(table).as("_key"))
+      .groupBy("file")
+      .agg(udaf(new BloomAgg(m, k), Encoders.STRING)(col("_key")).as("bloom"),
+        count(lit(1)).as("rows"))
+      .withColumn("m_bits", lit(m)).withColumn("k_hashes", lit(k))
+
   def stats(spark: SparkSession, table: LakeTable): Option[DataFrame] =
     if (exists(spark, indexPath(table))) Some(spark.read.parquet(indexPath(table)))
     else None
 
-  /** True iff the index covers the table's current manifest version. */
+  /** True iff the index covers the table's current manifest version. An
+    * index without rows (no version) or one that a failed write left
+    * unreadable is not fresh. */
   def isFresh(spark: SparkSession, table: LakeTable): Boolean =
-    stats(spark, table).exists { s =>
-      s.agg(min("as_of_commit")).head.getLong(0) == MergeWriter.baseFiles(spark, table)._1
-    }
+    scala.util.Try(stats(spark, table).exists { s =>
+      s.agg(min("as_of_commit")).head.get(0) == MergeWriter.baseFiles(spark, table)._1
+    }).getOrElse(false)
 
-  /** Surviving files for a key batch as a DataFrame (one `file` column) —
-    * stays distributed; [[pruneFilesForKeys]] collects it. */
   /** The membership probe as a NATIVE codegen'd expression
     * ([[graft.functions.BloomMightContain]] — no udf boxing in the
     * index-join hot path). */
@@ -135,6 +145,8 @@ object BloomIndex {
     graft.functions.TextFunctions.bloomMightContain(bloom, key, m, k)
   }
 
+  /** Surviving files for a key batch as a DataFrame (one `file` column) —
+    * stays distributed; [[pruneFilesForKeys]] collects it. */
   def pruneFilesForKeysDf(spark: SparkSession, table: LakeTable,
                           keys: Seq[String]): DataFrame = {
     val idx = stats(spark, table).getOrElse(
@@ -154,7 +166,7 @@ object BloomIndex {
     pruneFilesForKeysDf(spark, table, keys)
       .collect().map(_.getString(0)).toSeq
 
-  /** [[pruneFilesForKeys]] for a DISTRIBUTED key set (an upsert batch):
+  /** [[pruneFilesForKeys]] for a DISTRIBUTED key set (a commit's batch keys):
     * the small index is broadcast against the key frame, so millions of
     * batch keys never reach the driver — only the surviving file list
     * does (bounded by the file count). */
@@ -169,39 +181,27 @@ object BloomIndex {
       .select("file").distinct().collect().map(_.getString(0)).toSeq
   }
 
-  /** Incremental maintenance after a file-slice write: drop the index rows
-    * of `removed` files, bloom ONLY the `added` files (O(batch), not
-    * O(table)), restamp it with the current manifest version (the one
-    * the file-slice commit just published). Falls back to [[rebuild]] when
-    * no index exists or the sizing disagrees. */
-  def maintain(spark: SparkSession, table: LakeTable,
-               added: Seq[String], removed: Seq[String],
-               expectedKeysPerFile: Int = 100000, fpp: Double = 0.01): Unit = {
-    val (m, k) = sizing(expectedKeysPerFile, fpp)
-    stats(spark, table) match {
-      case None => rebuild(spark, table, expectedKeysPerFile, fpp)
-      case Some(idx0) if idx0.isEmpty ||
-          idx0.select("m_bits", "k_hashes").head() != org.apache.spark.sql.Row(m, k) =>
-        rebuild(spark, table, expectedKeysPerFile, fpp)
-      case Some(idx0) =>
-        // `removed` paths come from pruneFiles* (same provenance as the
-        // index's own `file` column), so a direct isin matches
-        val kept = idx0.filter(!col("file").isin(removed: _*))
-          .select("file", "bloom", "rows", "m_bits", "k_hashes")
-        val bloomUdaf = udaf(new BloomAgg(m, k), Encoders.STRING)
-        val newRows =
-          if (added.isEmpty) None
-          else Some(spark.read.parquet(added: _*)
-            .select(col("_metadata.file_path").as("file"), keyExpr(table).as("_key"))
-            .groupBy("file")
-            .agg(bloomUdaf(col("_key")).as("bloom"), count(lit(1)).as("rows"))
-            .withColumn("m_bits", lit(m)).withColumn("k_hashes", lit(k)))
-        val combined = newRows.fold(kept)(kept.unionByName(_))
-          .withColumn("as_of_commit", lit(MergeWriter.baseFiles(spark, table)._1))
-          .localCheckpoint(true) // we overwrite the path we just read
-        combined.repartition(1)
-          .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
-    }
+  /** Bring an index that was fresh before a commit to the version the
+    * commit published: drop the rows of files the version no longer lists,
+    * bloom ONLY the files it added (O(batch), not O(table)) with the
+    * index's own bloom size and hash count, and restamp it. */
+  def maintain(spark: SparkSession, table: LakeTable): Unit = {
+    val idx = stats(spark, table).getOrElse(
+      throw new IllegalStateException(s"no key_bloom index at ${indexPath(table)}"))
+    val indexed = idx.select("file", "m_bits", "k_hashes").collect()
+    val (m, k) = (indexed.head.getInt(1), indexed.head.getInt(2))
+    val (version, files) = MergeWriter.baseFiles(spark, table)
+    val rel = MergeWriter.relOf(spark, table)
+    val live = files.map(f => rel(new Path(f)) -> f).toMap
+    val known = indexed.map(_.getString(0)).map(f => rel(new Path(new URI(f))) -> f).toMap
+    val kept = idx.filter(col("file").isin(known.collect { case (r, f) if live.contains(r) => f }
+      .toSeq: _*)).select("file", "bloom", "rows", "m_bits", "k_hashes")
+    val added = (live -- known.keys).values.toSeq
+    (if (added.isEmpty) kept else kept.unionByName(blooms(spark, table, added, m, k)))
+      .withColumn("as_of_commit", lit(version))
+      .localCheckpoint(true) // we overwrite the path we just read
+      .repartition(1)
+      .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
   }
 
   /** Point-lookup read: scan only files whose blooms match, then filter

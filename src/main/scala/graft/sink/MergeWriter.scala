@@ -1,7 +1,8 @@
 package graft.sink
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.sources.BucketedLake
@@ -45,9 +46,13 @@ import graft.sources.BucketedLake.ManifestEntry
   * pointer) reads its listing, as the old readers did, and its next
   * commit adopts those files into its first version.
   *
-  * Scale design (100 TB): a COPY_ON_WRITE commit without deletes reads and
-  * rewrites only the batch's partitions (delete keys carry no partition,
-  * so a commit with deletes rewrites the whole table); MERGE_ON_READ
+  * Scale design (100 TB): a COPY_ON_WRITE commit picks ONE list of
+  * candidate base files and reads and rewrites only those; the version
+  * keeps every other file. An upsert-only batch into a partitioned table
+  * takes the files under its partitions, any other batch every base file
+  * (delete keys carry no partition); a fresh key index ([[BloomIndex]])
+  * narrows that to the files whose bloom may hold a batch key — batch-sized
+  * write amplification, deletes included. MERGE_ON_READ
   * appends the batch as ONE delta log of payload rows and `_graft_deleted`
   * tombstones, resolved at read time by (commit DESC, payload above
   * tombstone, precombine DESC) until `compact()` folds it into the base —
@@ -138,6 +143,12 @@ object MergeWriter {
   private def fsOf(spark: SparkSession, table: LakeTable): FileSystem =
     new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Table-relative path of a file of `table` (a manifest entry's `rel`). */
+  private[sink] def relOf(spark: SparkSession, table: LakeTable): Path => String = {
+    val root = fsOf(spark, table).makeQualified(new Path(table.path)).toUri.getPath
+    _.toUri.getPath.stripPrefix(s"$root/")
+  }
+
   /** Every file under `data/` and `_delta/` by table-relative path, with
     * its size; directories Spark hides (`_temporary`) are skipped. */
   private def listFiles(fs: FileSystem, table: LakeTable): Map[String, Long] = {
@@ -172,11 +183,10 @@ object MergeWriter {
     rel.split('/').toSeq.inits.drop(1).filter(_.nonEmpty).map(_.mkString("/")).toSeq
 
   /** The commit protocol (object doc): `write` adds files, the listings
-    * around it tell which (a failed attempt's never count), `keep` picks
-    * the `prior` entries that stay live given them. Returns the added. */
+    * around it tell which (a failed attempt's never count), and the
+    * version lists them after the `keep`ed `prior` entries. */
   private def publish(spark: SparkSession, table: LakeTable, prior: Snapshot,
-                      commit: Long)(write: => Unit)(
-                      keep: Seq[ManifestEntry] => Seq[ManifestEntry]): Seq[ManifestEntry] = {
+                      commit: Long, keep: Seq[ManifestEntry])(write: => Unit): Unit = {
     val fs = fsOf(spark, table)
     val before = listFiles(fs, table)
     write
@@ -184,7 +194,7 @@ object MergeWriter {
     // row counts stay unknown (-1): filling them would read every footer
     val added = listed.toSeq.collect { case (rel, size)
       if rel.endsWith(".parquet") && !before.contains(rel) => ManifestEntry(0, -1L, size, rel) }
-    val entries = keep(added) ++ added
+    val entries = keep ++ added
     val base = prior.version
     BucketedLake.writeManifest(spark, table.path, entries, base = Some(base),
       txns = Map(CommitTxn -> commit))
@@ -197,7 +207,6 @@ object MergeWriter {
     (doomed.flatMap(parents) -- live.flatMap(parents)).toSeq.sortBy(-_.length)
       .foreach(d => attempt(new Path(table.path, d)))
     if (base > 0) attempt(new Path(table.path, BucketedLake.versionedManifest(base)))
-    added
   }
 
   // ---------------------------------------------------------------- write
@@ -227,13 +236,15 @@ object MergeWriter {
   }
 
   /** insert/bulk_insert: straight partitioned append, no merge, no key
-    * shuffle — the 100 TB bulk-load path. */
+    * shuffle — the 100 TB bulk-load path. Its rows take the base's columns;
+    * a batch adding one rewrites the base ([[rewrite]]). */
   def append(batch: DataFrame, table: LakeTable): Unit = {
     val spark = batch.sparkSession
     val prior = snapshot(spark, table)
     val commit = prior.commit + 1L
-    publish(spark, table, prior, commit)(
-      writeBase(stampMeta(batch, table, commit), table))(_ => prior.entries): Unit
+    val stamped = stampMeta(batch, table, commit)
+    rewrite(spark, table, prior, commit, Some(stamped), Nil)(
+      _.unionByName(stamped, allowMissingColumns = true))
   }
 
   /** upsert: [[applyChanges]] with no deletes — one keyed commit whose
@@ -265,111 +276,95 @@ object MergeWriter {
     if (table.tableType == LakeTable.MergeOnRead) {
       // payload rows carry a null flag, which readLog reads as false
       val tombstones = delKeys.map(_.withColumn(DeletedCol, lit(true)))
-      publish(spark, table, prior, commit)(
+      publish(spark, table, prior, commit, prior.entries)(
         (ups ++ tombstones).reduce(_.unionByName(_, allowMissingColumns = true))
           .write.mode(SaveMode.Append)
-          .parquet(s"${table.path}/$DeltaDir/commit=$commit"))(_ => prior.entries): Unit
+          .parquet(s"${table.path}/$DeltaDir/commit=$commit"))
     } else cowCommit(spark, table, prior, commit, ups, delKeys)
   }
 
-  /** COW side of [[applyChanges]]: one anti-join of the base on every key
-    * of the batch, one union with the upserts, one rewrite. */
+  /** COW side of [[applyChanges]]: ONE list of candidate base files, then
+    * one [[rewrite]] that anti-joins them on every key of the batch and
+    * unions the upserts. The candidates start as every base file. An
+    * upsert-only batch into a partitioned table takes the files under its
+    * partitions, matched by directory name (so a key moved to another
+    * partition keeps its old copy there, as under Hudi's non-global index);
+    * delete keys carry no partition. A fresh [[BloomIndex]] keeps only the
+    * files whose key bloom may hold a batch key, and the commit then
+    * maintains it. */
   private def cowCommit(spark: SparkSession, table: LakeTable, prior: Snapshot,
                         commit: Long, ups: Option[DataFrame],
                         delKeys: Option[DataFrame]): Unit = {
-    val rows = readBase(spark, table, prior).fold(ups) { existing =>
-      val keys = table.recordKeyFields
-      // without deletes `ups` is defined (applyChanges requires a side)
-      val scope = if (delKeys.isEmpty && table.isPartitioned)
-        affectedPartitions(existing, ups.get, table) else existing
-      val batchKeys = (ups.map(_.select(keys.map(col): _*)) ++ delKeys).reduce(_ union _)
-      val survivors = scope.join(batchKeys, keys, "left_anti")
-      Some(ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true)))
+    val keys = table.recordKeyFields
+    val batchKeys = (ups.map(_.select(keys.map(col): _*)) ++ delKeys).reduce(_ union _)
+    val scoped = ups match {
+      case Some(u) if delKeys.isEmpty && table.isPartitioned && prior.base.nonEmpty =>
+        val dirs = partitionDirs(u, table)
+        prior.base.filter(e => dirs(parents(e.rel).head.stripPrefix(s"$DataDir/")))
+      case _ => prior.base
     }
-    rewrite(spark, table, prior, commit, rows, whole = delKeys.isDefined)
+    val indexed = prior.base.nonEmpty && BloomIndex.isFresh(spark, table)
+    val candidates = if (!indexed) scoped else {
+      val rel = relOf(spark, table)
+      val hits = BloomIndex.pruneFilesForKeyDf(spark, table,
+        batchKeys.select(BloomIndex.keyExpr(table).as("_key")))
+        .map(f => rel(new Path(new java.net.URI(f)))).toSet
+      scoped.filter(e => hits(e.rel))
+    }
+    rewrite(spark, table, prior, commit, ups, candidates) { existing =>
+      val survivors = existing.join(batchKeys, keys, "left_anti")
+      ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true))
+    }
+    // the index is an accelerator: a failed upkeep leaves it stale, and a
+    // stale index is never consulted
+    if (indexed) scala.util.Try(BloomIndex.maintain(spark, table)): Unit
   }
 
-  /** The rows of `existing` in the partitions `batch` touches: a STATIC
-    * disjunction of its few partition tuples prunes at scan PLANNING time,
-    * where a runtime semi join would scan the whole table; above the cap
-    * (near-unpartitioned layouts) a broadcast semi join is the safer plan. */
-  private def affectedPartitions(existing: DataFrame, batch: DataFrame,
-                                 table: LakeTable): DataFrame = {
-    val parts = batch.select(table.partitionFields.map(col): _*).distinct()
-    val partRows = parts.limit(1001).collect()
-    if (partRows.length <= 1000) {
-      val cond = partRows.iterator.map { r =>
-        table.partitionFields.zipWithIndex
-          .map { case (f, i) => col(f) <=> lit(r.get(i)) }
-          .reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      existing.where(cond)
-    } else existing.join(broadcast(parts), table.partitionFields, "left_semi")
+  /** The partition directories (`a=1/b=x`) `batch` writes, named as Spark's
+    * writer names them: each value's string cast, escaped. */
+  private def partitionDirs(batch: DataFrame, table: LakeTable): Set[String] = {
+    val fields = table.partitionFields
+    batch.select(fields.map(f => col(f).cast("string")): _*).distinct().collect()
+      .map(r => fields.indices.map(i =>
+        ExternalCatalogUtils.getPartitionPathString(fields(i), r.getString(i))).mkString("/"))
+      .toSet
   }
 
-  /** The one table rewrite: `rows` land as new base files, replacing every
-    * prior file of a directory they were written to — with `whole`, every
-    * prior file (MOR log included). */
-  private def rewrite(spark: SparkSession, table: LakeTable, prior: Snapshot,
-                      commit: Long, rows: Option[DataFrame], whole: Boolean): Unit =
-    publish(spark, table, prior, commit)(rows.foreach(writeBase(_, table))) { added =>
-      val dirs = added.map(e => parents(e.rel).head).toSet
-      if (whole) Nil else prior.entries.filterNot(e => dirs(parents(e.rel).head))
-    }: Unit
+  /** The one base write: the `candidates` (prior base files) are read and
+    * `merge` turns them into the rows that replace them; the published
+    * version keeps every other prior file. Every live base file has the
+    * table's columns (Spark takes a table's schema from ONE file), which
+    * the candidates' footers tell, or with none one base file's: a `batch`
+    * with a column the base lacks makes every base file a candidate, and
+    * rows written beside untouched files are aligned to the base's columns
+    * (NULL where the batch lacks one). */
+  private def rewrite(spark: SparkSession, table: LakeTable, prior: Snapshot, commit: Long,
+                      batch: Option[DataFrame], candidates: Seq[ManifestEntry])(
+                      merge: DataFrame => DataFrame): Unit = {
+    def read(files: Seq[ManifestEntry]) =
+      readFiles(spark, table, files.map(e => new Path(table.path, e.rel).toString))
+    val probe = Option.when(prior.base.nonEmpty)(
+      read(if (candidates.nonEmpty) candidates else prior.base.take(1)))
+    val evolves = probe.exists(p => batch.exists(_.columns.exists(c => !p.columns.contains(c))))
+    val files = if (evolves) prior.base else candidates
+    val rows =
+      if (evolves) Some(merge(read(files)))
+      else if (files.nonEmpty) probe.map(merge)
+      else batch.map(b => probe.fold(b)(p =>
+        merge(spark.createDataFrame(java.util.List.of[Row](), p.schema))))
+    val gone = files.map(_.rel).toSet
+    publish(spark, table, prior, commit, prior.entries.filterNot(e => gone(e.rel)))(
+      rows.foreach(writeBase(_, table)))
+  }
 
-  /** Rewrite the current view through `f`, keeping the data commit
-    * (compaction, clustering); a table without files is left alone. */
+  /** Rewrite the current view through `f`, replacing every prior file and
+    * keeping the data commit (compaction, clustering); a table without
+    * files is left alone. */
   private[sink] def rewriteView(spark: SparkSession, table: LakeTable)(
                                 f: DataFrame => DataFrame): Unit = {
     val prior = snapshot(spark, table)
-    if (prior.entries.nonEmpty)
-      rewrite(spark, table, prior, prior.commit, Some(f(view(spark, table, prior, Long.MaxValue))),
-        whole = true)
-  }
-
-  /** File-slice COW upsert — the Hudi BLOOM-index write path: rewrite only
-    * the FILES whose bloom might hold a batch key (found by a distributed
-    * probe), not every affected partition — batch-sized, not
-    * partition-sized, write amplification. The merged slices replace the
-    * touched files in one published version, then the index blooms the new
-    * files only. The old slices go only after the publish, so a crash
-    * leaves the old snapshot, never duplicates or lost rows. The index is
-    * an accelerator: failing to upkeep it after the commit leaves it stale
-    * (the next call rebuilds it) unreported.
-    * Falls back to [[upsert]] when the table or index is missing/stale or
-    * the batch evolves the schema (an untouched file cannot learn a new
-    * column). */
-  def upsertIndexed(spark: SparkSession, batch: DataFrame, table: LakeTable,
-                    expectedKeysPerFile: Int = 100000, fpp: Double = 0.01): Unit = {
-    require(table.tableType != LakeTable.MergeOnRead,
-      "upsertIndexed is the COW write path; MOR appends delta logs already")
-    val deduped = dedupByPrecombine(batch, table.recordKeyFields, table.precombineField)
-    val prior = snapshot(spark, table)
-    val base = readBase(spark, table, prior)
-    val metaCols = Set(CommitTimeCol, RecordKeyCol)
-    val schemaStable = base.exists(b =>
-      (b.columns.toSet -- metaCols) == stampMeta(deduped, table, 0L).columns.toSet -- metaCols)
-    if (base.isEmpty || !BloomIndex.isFresh(spark, table) || !schemaStable) {
-      // fall back to the partition-pruned rewrite, then (re)build the index
-      // so the NEXT batch takes the file-slice path — the index stays in
-      // sync as a side effect of writing, like Hudi's
-      upsert(spark, batch, table)
-      scala.util.Try(BloomIndex.rebuild(spark, table, expectedKeysPerFile, fpp))
-      return
-    }
-    val keyDf = deduped.select(BloomIndex.keyExpr(table).as("_key"))
-    val touched = BloomIndex.pruneFilesForKeyDf(spark, table, keyDf)
-    val root = fsOf(spark, table).makeQualified(new Path(table.path)).toUri.getPath
-    val touchedRels = touched.map(f =>
-      new Path(new java.net.URI(f)).toUri.getPath.stripPrefix(s"$root/")).toSet
-    val commit = prior.commit + 1L
-    val stamped = stampMeta(deduped, table, commit)
-    val slices = if (touched.isEmpty) stamped
-      else mergeBatch(readFiles(spark, table, touched), stamped, table.recordKeyFields)
-    val added = publish(spark, table, prior, commit)(writeBase(slices, table))(
-      _ => prior.entries.filterNot(e => touchedRels(e.rel)))
-    scala.util.Try(BloomIndex.maintain(spark, table,
-      added.map(e => new Path(table.path, e.rel).toString), touched, expectedKeysPerFile, fpp))
+    if (prior.entries.nonEmpty) publish(spark, table, prior, prior.commit, Nil)(
+      writeBase(f(view(spark, table, prior, Long.MaxValue)), table))
   }
 
   // ---------------------------------------------------------------- read
@@ -412,7 +407,7 @@ object MergeWriter {
   /** The MOR log `files` as ONE relation. Schemas merge: a tombstone-only
     * commit carries just the keys and `_graft_deleted`, and without the
     * merge Spark takes one file's schema, so the payload or the flag would
-    * vanish from the whole chain. `_graft_deleted` is false on payload. */
+    * vanish from the entire chain. `_graft_deleted` is false on payload. */
   private def readLog(spark: SparkSession, table: LakeTable,
                       files: Seq[ManifestEntry]): DataFrame = {
     val logs = spark.read
@@ -490,8 +485,8 @@ object MergeWriter {
     }
   }
 
-  /** MOR compaction: fold the log into the base with one whole-table
-    * [[rewrite]] of the view, keeping [[latestCommit]]. */
+  /** MOR compaction: fold the log into the base with one rewrite of
+    * the entire view ([[rewriteView]]), keeping [[latestCommit]]. */
   def compact(spark: SparkSession, table: LakeTable): Unit =
     if (table.tableType == LakeTable.MergeOnRead &&
         snapshot(spark, table).log(_ => true).nonEmpty) rewriteView(spark, table)(identity)

@@ -1264,23 +1264,6 @@ object BucketedLake {
       }
   }
 
-  /** Per-bucket `(path, length)` file map for a scan: ONE manifest read
-    * when present (the write-time contract), one executor-parallel
-    * listing otherwise. Buckets with no files map to empty arrays. */
-  private[sources] def allBucketFiles(spark: SparkSession, path: String,
-                                      buckets: Int)
-      : Map[Int, Array[(String, Long)]] = {
-    val byBucket: Map[Int, Array[(String, Long)]] =
-      readManifest(spark, path) match {
-        case Some(es) => es.groupBy(_.bucket).view
-          .mapValues(_.map(e => (s"$path/${e.rel}", e.size)).toArray).toMap
-        case None => listDataFiles(spark, path).groupBy(_._1).view
-          .mapValues(_.map(f => (f._2, f._3)).toArray).toMap
-      }
-    (0 until buckets).map(b =>
-      b -> byBucket.getOrElse(b, Array.empty[(String, Long)])).toMap
-  }
-
   /** Table layout metadata: key column, bucket count, schema (json),
     * whether bucket files are key-sorted (written that way by
     * [[write]] — lets the scan report its ordering so co-located SMJs
@@ -3992,7 +3975,7 @@ private[sources] class GraftBucketScanBuilder(spark: SparkSession, path: String,
           total
         case EdgePlan(_, c, dt, wantLo) =>
           var best: Option[Any] = None
-          es.foreach { case (e, st) =>
+          es.foreach { case (_, st) =>
             val cs = st.getOrElse(c, return None)
             // string MIN/MAX needs ATTAINED edges: decline on any
             // footer-derived (inexact) window
@@ -4335,7 +4318,7 @@ private[sources] class GraftBucketScan(spark: SparkSession, path: String,
             })
         }
       }
-    partAxes.zipWithIndex.foreach { case ((pc, dt), axis) =>
+    partAxes.zipWithIndex.foreach { case ((pc, _), axis) =>
       if (required.fieldNames.contains(pc)) {
         val canons = keptFiles.map(k =>
           k.partBindings.lift(axis).flatMap(_._3))

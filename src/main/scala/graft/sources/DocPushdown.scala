@@ -59,7 +59,7 @@ object DocPushdown {
   }
 
   private def mongoStage(df: DataFrame, stage: JsonNode,
-                         lookups: Map[String, DataFrame] = Map.empty): DataFrame = {
+                         lookups: Map[String, DataFrame]): DataFrame = {
     require(stage.isObject && stage.size() == 1, s"bad pipeline stage: $stage")
     val name = stage.fieldNames().next()
     val body = stage.get(name)

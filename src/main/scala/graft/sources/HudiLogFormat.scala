@@ -131,7 +131,7 @@ object HudiLogFormat {
             s"implausible log block content length $contentLen")
           val content = new Array[Byte](contentLen.toInt)
           d.readFully(content)
-          val _footer = readMetaMap(d)
+          readMetaMap(d): Unit // the block footer, read to advance the stream
           d.readLong() // total block length
           out += LogBlock(blockType, header, content)
         } catch {

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot / time-travel reader for Apache Iceberg tables (the published
   * spec: `metadata/vN.metadata.json` (+ `version-hint.text` for Hadoop

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
@@ -52,7 +51,6 @@ object OleCfb {
     val numFatSectors = buf.getInt(44)
     val firstDirSector = buf.getInt(48)
     val firstMiniFat = buf.getInt(60)
-    val numMiniFat = buf.getInt(64)
     val firstDifat = buf.getInt(68)
     val numDifat = buf.getInt(72)
 

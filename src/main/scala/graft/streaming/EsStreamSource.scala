@@ -74,8 +74,6 @@ class EsStreamTable(opts: EsStreamOptions) extends Table with SupportsRead {
 /** Stateless driver: offsets ARE server-side cursor values. */
 class EsMicroBatchStream(opts: EsStreamOptions) extends MicroBatchStream {
 
-  private def mapper = DocPushdown.jsonMapper
-
   override def initialOffset(): Offset = MongoStreamOffset(opts.startAfter)
 
   override def latestOffset(): Offset = {

@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow

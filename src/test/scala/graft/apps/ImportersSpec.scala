@@ -75,7 +75,7 @@ class ImportersSpec extends SparkSuite {
     assert(got === Set(("foo", "bar", 1), ("baz", "qux", 2)))
   }
 
-  test("hoodie.index.type=BLOOM routes upserts through the file-slice path") {
+  test("hoodie.index.type=BLOOM keeps a fresh key index across upserts") {
     val src = tmp("graft-bloom-src")
     val out = tmp("graft-bloom-out")
     Files.writeString(java.nio.file.Path.of(src, "a.csv"), "id,v\n1,a\n2,b\n")
@@ -87,11 +87,11 @@ class ImportersSpec extends SparkSuite {
       "hoodie.index.type" -> "BLOOM",
       "hoodie.datasource.write.recordkey.field" -> "id",
       "hoodie.datasource.write.precombine.field" -> "id"))
-    // batch 1: bootstrap (fallback) — must leave a FRESH bloom index behind
+    // batch 1: the first commit — the app must leave a FRESH bloom index behind
     FileImport.sync(spark, conf, Map("resource" -> s"$src/a.csv"))
     val table = graft.sink.LakeTable.fromConfig(out, conf)
     assert(graft.sink.BloomIndex.isFresh(spark, table))
-    // batch 2: takes the indexed path and keeps the index fresh
+    // batch 2: the commit narrows by the index and keeps it fresh
     Files.writeString(java.nio.file.Path.of(src, "b.csv"), "id,v\n2,B2\n3,c\n")
     FileImport.sync(spark, conf, Map("resource" -> s"$src/b.csv"))
     assert(graft.sink.BloomIndex.isFresh(spark, table))

@@ -72,8 +72,8 @@ class CommitFaultSpec extends SparkSuite {
     Op("cluster", 0, t => Clustering.cluster(spark, t, Seq("id"), numFiles = 2), identity,
       setup = MergeWriter.compact(spark, _))) ++
     (if (mor) Seq(Op("compact", 0, t => MergeWriter.compact(spark, t), identity))
-     else Seq(Op("upsertIndexed", 1, t => MergeWriter.upsertIndexed(spark,
-       frame(idxUps: _*), t, expectedKeysPerFile = 10, fpp = 0.01), merge(_, idxUps),
+     else Seq(Op("indexed upsert", 1, t => MergeWriter.upsert(spark, frame(idxUps: _*), t),
+       merge(_, idxUps),
        // the index records absolute file paths, so each copy builds its own
        prep = BloomIndex.rebuild(spark, _, expectedKeysPerFile = 10, fpp = 0.01))))
 

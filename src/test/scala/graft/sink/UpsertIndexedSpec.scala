@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** File-slice COW upsert: only bloom-matched files are rewritten, results
-  * equal the partition-pruned upsert, the index maintains incrementally,
-  * and every fallback (missing/stale index, schema evolution) degrades to
-  * the plain upsert path. */
+/** COW upsert on a table with a fresh key index: only bloom-matched files
+  * are rewritten, results equal the unindexed upsert, the commit maintains
+  * the index incrementally, and a stale index or a batch that adds a
+  * column makes it the plain upsert. */
 class UpsertIndexedSpec extends SparkSuite {
 
   import spark.implicits._
@@ -21,13 +21,13 @@ class UpsertIndexedSpec extends SparkSuite {
     new java.io.File(s"${t.path}/data").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
 
-  private def build3(): LakeTable = {
+  private def build3(indexed: Boolean = true): LakeTable = {
     val t = LakeTable(tmp(), "t", Seq("id"), "ver")
     for (b <- 0 until 3) {
       val rows = (b * 100 until (b + 1) * 100).map(i => (i.toLong, s"v$i", 1L))
       MergeWriter.append(rows.toDF("id", "v", "ver").repartition(1), t)
     }
-    BloomIndex.rebuild(spark, t, expectedKeysPerFile = 100, fpp = 0.001)
+    if (indexed) BloomIndex.rebuild(spark, t, expectedKeysPerFile = 100, fpp = 0.001)
     t
   }
 
@@ -38,7 +38,7 @@ class UpsertIndexedSpec extends SparkSuite {
     // keys 150/160 live in the middle file; 5000 is brand new
     val batch = Seq((150L, "UP", 2L), (160L, "UP", 2L), (5000L, "NEW", 1L))
       .toDF("id", "v", "ver")
-    MergeWriter.upsertIndexed(spark, batch, t, expectedKeysPerFile = 100, fpp = 0.001)
+    MergeWriter.upsert(spark, batch, t)
     val after = files(t)
     val untouched = before.intersect(after)
     assert(untouched.size >= 2, s"too many files rewritten: kept $untouched of $before")
@@ -58,8 +58,7 @@ class UpsertIndexedSpec extends SparkSuite {
   test("insert-only batch appends a slice without touching any file") {
     val t = build3()
     val before = files(t)
-    MergeWriter.upsertIndexed(spark, Seq((9000L, "X", 1L)).toDF("id", "v", "ver"),
-      t, expectedKeysPerFile = 100, fpp = 0.001)
+    MergeWriter.upsert(spark, Seq((9000L, "X", 1L)).toDF("id", "v", "ver"), t)
     val after = files(t)
     assert(before.subsetOf(after), "an existing file was rewritten")
     assert(after.size === before.size + 1)
@@ -69,10 +68,10 @@ class UpsertIndexedSpec extends SparkSuite {
 
   test("matches the plain upsert result exactly") {
     val tIdx = build3()
-    val tPlain = build3()
+    val tPlain = build3(indexed = false)
     val batch = Seq((0L, "A", 9L), (250L, "B", 9L), (777L, "C", 1L))
       .toDF("id", "v", "ver")
-    MergeWriter.upsertIndexed(spark, batch, tIdx, 100, 0.001)
+    MergeWriter.upsert(spark, batch, tIdx)
     MergeWriter.upsert(spark, batch, tPlain)
     val a = MergeWriter.readView(spark, tIdx)
       .select("id", "v", "ver").as[(Long, String, Long)].collect().toSet
@@ -84,18 +83,22 @@ class UpsertIndexedSpec extends SparkSuite {
   test("clustering between file-slice upserts stales the index; the next upsert stays exact") {
     val t = build3()
     val first = Seq((5L, "A", 2L), (150L, "B", 2L)).toDF("id", "v", "ver")
-    MergeWriter.upsertIndexed(spark, first, t, expectedKeysPerFile = 100, fpp = 0.001)
+    MergeWriter.upsert(spark, first, t)
     assert(BloomIndex.isFresh(spark, t))
     // clustering rewrites every file but keeps the data commit
     Clustering.cluster(spark, t, Seq("id"), numFiles = 2)
     assert(!BloomIndex.isFresh(spark, t))
     val second = Seq((150L, "C", 3L), (299L, "D", 2L), (600L, "E", 1L)).toDF("id", "v", "ver")
-    MergeWriter.upsertIndexed(spark, second, t, expectedKeysPerFile = 100, fpp = 0.001)
+    MergeWriter.upsert(spark, second, t)
     // plain-Scala recompute: each batch replaces the rows with its keys
     val expected = Seq(Seq(5L -> "A", 150L -> "B"), Seq(150L -> "C", 299L -> "D", 600L -> "E"))
       .foldLeft((0L until 300L).map(i => i -> s"v$i").toMap)(_ ++ _)
     assert(MergeWriter.readView(spark, t).select("id", "v").as[(Long, String)]
       .collect().sorted.toSeq === expected.toSeq.sorted)
+    // a stale index is neither consulted nor maintained; a rebuild
+    // freshens it
+    assert(!BloomIndex.isFresh(spark, t))
+    BloomIndex.rebuild(spark, t, 100, 0.001)
     assert(BloomIndex.isFresh(spark, t))
   }
 
@@ -104,13 +107,16 @@ class UpsertIndexedSpec extends SparkSuite {
     // make the index stale
     MergeWriter.append(Seq((400L, "x", 1L)).toDF("id", "v", "ver"), t)
     assert(!BloomIndex.isFresh(spark, t))
-    MergeWriter.upsertIndexed(spark, Seq((400L, "y", 2L)).toDF("id", "v", "ver"), t)
+    MergeWriter.upsert(spark, Seq((400L, "y", 2L)).toDF("id", "v", "ver"), t)
     assert(MergeWriter.readView(spark, t)
       .filter(col("id") === 400L).select("v").as[String].head() === "y")
-    // schema evolution: the new column must land (fallback rewrites fully)
+    // schema evolution: the new column must land (every file is rewritten)
     BloomIndex.rebuild(spark, t, 100, 0.001)
+    val before = files(t)
     val evolved = Seq((0L, "z", 9L, "extra")).toDF("id", "v", "ver", "note")
-    MergeWriter.upsertIndexed(spark, evolved, t)
+    MergeWriter.upsert(spark, evolved, t)
+    assert(files(t).intersect(before).isEmpty, "a file without the new column stayed")
+    assert(BloomIndex.isFresh(spark, t))
     val row = MergeWriter.readView(spark, t).filter(col("id") === 0L)
       .select("v", "note").as[(String, Option[String])].head()
     assert(row === (("z", Some("extra"))))
