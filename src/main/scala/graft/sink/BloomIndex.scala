@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.hashing.MurmurHash3
 
+import graft.sources.BucketedLake.ManifestEntry
+
 /** Per-file Bloom filter over the record key — the analog of Hudi's BLOOM
   * index (`hoodie.index.type=BLOOM`: per-file key blooms consulted before
   * an upsert/lookup touches the file).
@@ -113,7 +115,7 @@ object BloomIndex {
   }
 
   /** One index row per base file of `files`: its key bloom and row count. */
-  private def blooms(spark: SparkSession, table: LakeTable, files: Seq[String],
+  private def blooms(spark: SparkSession, table: LakeTable, files: Seq[ManifestEntry],
                      m: Int, k: Int): DataFrame =
     MergeWriter.readFiles(spark, table, files)
       .select(col("_metadata.file_path").as("file"), keyExpr(table).as("_key"))
@@ -192,11 +194,11 @@ object BloomIndex {
     val (m, k) = (indexed.head.getInt(1), indexed.head.getInt(2))
     val (version, files) = MergeWriter.baseFiles(spark, table)
     val rel = MergeWriter.relOf(spark, table)
-    val live = files.map(f => rel(new Path(f)) -> f).toMap
+    val live = files.map(_.rel).toSet
     val known = indexed.map(_.getString(0)).map(f => rel(new Path(new URI(f))) -> f).toMap
-    val kept = idx.filter(col("file").isin(known.collect { case (r, f) if live.contains(r) => f }
+    val kept = idx.filter(col("file").isin(known.collect { case (r, f) if live(r) => f }
       .toSeq: _*)).select("file", "bloom", "rows", "m_bits", "k_hashes")
-    val added = (live -- known.keys).values.toSeq
+    val added = files.filterNot(e => known.contains(e.rel))
     (if (added.isEmpty) kept else kept.unionByName(blooms(spark, table, added, m, k)))
       .withColumn("as_of_commit", lit(version))
       .localCheckpoint(true) // we overwrite the path we just read
@@ -215,7 +217,8 @@ object BloomIndex {
   def readKeys(spark: SparkSession, table: LakeTable, keys: Seq[String],
                maxFileListSize: Int = 100000): DataFrame = {
     val exact = keyExpr(table).isin(keys: _*)
-    val full = MergeWriter.readFiles(spark, table, MergeWriter.baseFiles(spark, table)._2)
+    val base = MergeWriter.baseFiles(spark, table)._2
+    val full = MergeWriter.readFiles(spark, table, base)
     if (!isFresh(spark, table)) return full.filter(exact)
     val survivors = pruneFilesForKeysDf(spark, table, keys)
     // ONE job decides the branch AND yields the list when it is small
@@ -223,7 +226,8 @@ object BloomIndex {
     val head = survivors.limit(maxFileListSize + 1).collect().map(_.getString(0))
     if (head.isEmpty) full.filter(lit(false))
     else if (head.length <= maxFileListSize)
-      MergeWriter.readFiles(spark, table, head.toSeq).filter(exact)
+      MergeWriter.readFiles(spark, table, MergeWriter.entriesOf(spark, table, base, head))
+        .filter(exact)
     else {
       // collision-proof: qualify via the survivors frame and a name no
       // data schema will carry

@@ -120,7 +120,8 @@ object ColumnStats {
     * survivors the scan was near-full anyway. */
   def read(spark: SparkSession, table: LakeTable,
            bounds: Seq[ColumnRange], maxFileListSize: Int = 100000): DataFrame = {
-    val full = MergeWriter.readFiles(spark, table, MergeWriter.baseFiles(spark, table)._2)
+    val base = MergeWriter.baseFiles(spark, table)._2
+    val full = MergeWriter.readFiles(spark, table, base)
     if (!isFresh(spark, table)) return full.filter(residual(bounds))
     val survivors = pruneFilesDf(spark, table, bounds)
     // ONE job decides the branch AND yields the list when it is small:
@@ -128,7 +129,8 @@ object ColumnStats {
     val head = survivors.limit(maxFileListSize + 1).collect().map(_.getString(0))
     if (head.isEmpty) full.filter(lit(false))
     else if (head.length <= maxFileListSize)
-      MergeWriter.readFiles(spark, table, head.toSeq).filter(residual(bounds))
+      MergeWriter.readFiles(spark, table, MergeWriter.entriesOf(spark, table, base, head))
+        .filter(residual(bounds))
     else {
       // collision-proof: qualify via the survivors frame and a name no
       // data schema will carry

@@ -1,11 +1,11 @@
 package graft.sink
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-import graft.sources.BucketedLake
+import graft.sources.{BucketedLake, StaticFileIndex}
 import graft.sources.BucketedLake.ManifestEntry
 
 /** W1 — Hudi-equivalent keyed merge semantics over partitioned parquet
@@ -38,7 +38,15 @@ import graft.sources.BucketedLake.ManifestEntry
   * throws leaves the old snapshot; its replay lands and reclaims the
   * failed attempt's files. Readers take the version's file list; direct
   * listers of `data/` ([[CatalogSync]]'s Hive location, specs) see exactly
-  * the snapshot once a commit has finished. A commit's files are the ones
+  * the snapshot once a commit has finished. Every base read, query and
+  * commit alike ([[readFiles]]), builds Spark's parquet relation straight
+  * from the version's entries: their sizes stand in for a stat, Spark's
+  * own partition discovery types the columns from the directories under
+  * `data/`, and one footer read on the driver gives the schema — no
+  * listing, no Spark job, and two reads of one version are one relation
+  * to the cache. Its trade-offs, the same as the Delta, Hudi and Iceberg
+  * readers': `_metadata.file_modification_time` reads 0, and splits carry
+  * no block locations. A commit's files are the ones
   * its write added to the listing, so a table takes ONE writer at a time
   * (Hudi's single-writer mode); a second writer's publish fails the
   * version gate, but files it wrote meanwhile may be taken as the first
@@ -56,8 +64,8 @@ import graft.sources.BucketedLake.ManifestEntry
   * appends the batch as ONE delta log of payload rows and `_graft_deleted`
   * tombstones, resolved at read time by (commit DESC, payload above
   * tombstone, precombine DESC) until `compact()` folds it into the base —
-  * O(batch) write amplification. The only shuffles are the key shuffle of
-  * the dedup and the partition-path clustering before write. */
+  * O(batch) write amplification. The only shuffle is the key shuffle of
+  * the dedup. */
 object MergeWriter {
 
   /** Hudi write operations (hoodie.datasource.write.operation). */
@@ -143,10 +151,23 @@ object MergeWriter {
   private def fsOf(spark: SparkSession, table: LakeTable): FileSystem =
     new Path(table.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def rootOf(spark: SparkSession, table: LakeTable): Path =
+    fsOf(spark, table).makeQualified(new Path(table.path))
+
   /** Table-relative path of a file of `table` (a manifest entry's `rel`). */
   private[sink] def relOf(spark: SparkSession, table: LakeTable): Path => String = {
-    val root = fsOf(spark, table).makeQualified(new Path(table.path)).toUri.getPath
+    val root = rootOf(spark, table).toUri.getPath
     _.toUri.getPath.stripPrefix(s"$root/")
+  }
+
+  /** The `entries` among `files`, given as `_metadata.file_path` values
+    * (what the side indexes record). */
+  private[sink] def entriesOf(spark: SparkSession, table: LakeTable,
+                              entries: Seq[ManifestEntry],
+                              files: Iterable[String]): Seq[ManifestEntry] = {
+    val rel = relOf(spark, table)
+    val named = files.iterator.map(f => rel(new Path(new java.net.URI(f)))).toSet
+    entries.filter(e => named(e.rel))
   }
 
   /** Every file under `data/` and `_delta/` by table-relative path, with
@@ -232,7 +253,7 @@ object MergeWriter {
   private def writeBase(df: DataFrame, table: LakeTable): Unit = {
     val w = df.write.mode(SaveMode.Append)
     (if (table.isPartitioned) w.partitionBy(table.partitionFields: _*) else w)
-      .parquet(dataPath(table))
+      .parquet(s"${table.path}/$DataDir")
   }
 
   /** insert/bulk_insert: straight partitioned append, no merge, no key
@@ -304,13 +325,9 @@ object MergeWriter {
       case _ => prior.base
     }
     val indexed = prior.base.nonEmpty && BloomIndex.isFresh(spark, table)
-    val candidates = if (!indexed) scoped else {
-      val rel = relOf(spark, table)
-      val hits = BloomIndex.pruneFilesForKeyDf(spark, table,
-        batchKeys.select(BloomIndex.keyExpr(table).as("_key")))
-        .map(f => rel(new Path(new java.net.URI(f)))).toSet
-      scoped.filter(e => hits(e.rel))
-    }
+    val candidates = if (!indexed) scoped
+      else entriesOf(spark, table, scoped, BloomIndex.pruneFilesForKeyDf(spark, table,
+        batchKeys.select(BloomIndex.keyExpr(table).as("_key"))))
     rewrite(spark, table, prior, commit, ups, candidates) { existing =>
       val survivors = existing.join(batchKeys, keys, "left_anti")
       ups.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true))
@@ -341,14 +358,12 @@ object MergeWriter {
   private def rewrite(spark: SparkSession, table: LakeTable, prior: Snapshot, commit: Long,
                       batch: Option[DataFrame], candidates: Seq[ManifestEntry])(
                       merge: DataFrame => DataFrame): Unit = {
-    def read(files: Seq[ManifestEntry]) =
-      readFiles(spark, table, files.map(e => new Path(table.path, e.rel).toString))
     val probe = Option.when(prior.base.nonEmpty)(
-      read(if (candidates.nonEmpty) candidates else prior.base.take(1)))
+      readFiles(spark, table, if (candidates.nonEmpty) candidates else prior.base.take(1)))
     val evolves = probe.exists(p => batch.exists(_.columns.exists(c => !p.columns.contains(c))))
     val files = if (evolves) prior.base else candidates
     val rows =
-      if (evolves) Some(merge(read(files)))
+      if (evolves) Some(merge(readFiles(spark, table, files)))
       else if (files.nonEmpty) probe.map(merge)
       else batch.map(b => probe.fold(b)(p =>
         merge(spark.createDataFrame(java.util.List.of[Row](), p.schema))))
@@ -369,24 +384,27 @@ object MergeWriter {
 
   // ---------------------------------------------------------------- read
 
-  private def dataPath(table: LakeTable): String = s"${table.path}/$DataDir"
-
-  /** Base `files` (absolute), partition columns from their directories. */
+  /** The one read of base `files` (object doc): a relation built from
+    * the entries, partition columns from their directories under `data/`,
+    * the schema from the first file's footer. */
   private[sink] def readFiles(spark: SparkSession, table: LakeTable,
-                              files: Seq[String]): DataFrame =
-    spark.read.option("basePath", dataPath(table)).parquet(files: _*)
+                              files: Seq[ManifestEntry]): DataFrame = {
+    val root = rootOf(spark, table)
+    StaticFileIndex.listedParquet(spark, new Path(root, DataDir), files.map(e =>
+      new FileStatus(e.size, false, 1, 128L << 20, 0L, new Path(root, e.rel))))
+  }
 
   private def readBase(spark: SparkSession, table: LakeTable,
                        snap: Snapshot): Option[DataFrame] =
-    Option.when(snap.base.nonEmpty)(
-      readFiles(spark, table, snap.base.map(e => new Path(table.path, e.rel).toString)))
+    Option.when(snap.base.nonEmpty)(readFiles(spark, table, snap.base))
 
   /** The current manifest version (0 = none; compaction and clustering
-    * advance it, unlike [[latestCommit]]) and its base files as absolute
-    * paths — what the side indexes build from and record. */
-  private[sink] def baseFiles(spark: SparkSession, table: LakeTable): (Long, Seq[String]) = {
+    * advance it, unlike [[latestCommit]]) and its base files — what the
+    * side indexes build from and record. */
+  private[sink] def baseFiles(spark: SparkSession,
+                              table: LakeTable): (Long, Seq[ManifestEntry]) = {
     val snap = snapshot(spark, table)
-    (snap.version, snap.base.map(e => new Path(table.path, e.rel).toString))
+    (snap.version, snap.base)
   }
 
   /** Latest data commit on the table's timeline (0 = empty table). */

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ParquetReadShim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Snapshot / time-travel / incremental reader for REAL Apache Hudi
@@ -441,9 +442,11 @@ object HudiRead {
     val keys = tuples.head.map(_._1)
     if (!tuples.forall(_.map(_._1) == keys)) return None
     if (chosen.exists(_.size < 0L)) return None // listing without lengths
+    def status(b: BaseFile) =
+      new org.apache.hadoop.fs.FileStatus(b.size, false, 1, 128L << 20, 0L, new Path(b.path))
     // one driver footer read types the partition columns (and the data
-    // schema) — bounded, same grade as any schema inference
-    val fileSchema = spark.read.parquet(chosen.head.path).schema
+    // schema): no Spark job
+    val fileSchema = ParquetReadShim.footerSchema(spark, status(chosen.head))
     val partitionSchema = StructType(keys.map(k =>
       fileSchema.fields.find(_.name == k)
         .map(f => StructField(k, f.dataType, f.nullable))
@@ -458,10 +461,7 @@ object HudiRead {
             pv.zip(partitionSchema.fields).map { case ((_, v), f) =>
               StaticFileIndex.partitionValue(v, f.dataType)
             }.toArray[Any])
-        (row, group.map { case (b, _) =>
-          new org.apache.hadoop.fs.FileStatus(b.size, false, 1, 128L << 20,
-            0L, new Path(b.path))
-        }.toArray)
+        (row, group.map { case (b, _) => status(b) }.toArray)
       }
     // declared order when the files repeat the partition columns (the
     // usual Hudi layout); hive-style files without them append the

@@ -1,11 +1,14 @@
 package graft.sources
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftshim.ParquetReadShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -70,6 +73,45 @@ final class StaticFileIndex(
 
   override val sizeInBytes: Long =
     partitions.iterator.flatMap(_._2).map(_.getLen).sum
+}
+
+/** A [[FileIndex]] over a table version's EXPLICIT file list under `root`
+  * (a manifest's entries, sizes included) whose partitions are Spark's own
+  * directory discovery: [[inferPartitioning]] parses the files'
+  * directories below `root`, so partition columns, their types, NULL
+  * values and unescaping are exactly what a
+  * `spark.read.option("basePath", root)` read of the same files infers —
+  * without that read's per-file stat, its listing job above
+  * `parallelPartitionDiscovery.threshold` paths, or any filesystem call.
+  * Equal by root and file set: two reads of one version are the same
+  * relation, so a cached read serves the next. */
+final class ManifestFileIndex(spark: SparkSession, val root: Path, files: Seq[FileStatus])
+  extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+
+  override def rootPaths: Seq[Path] = Seq(root)
+
+  override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+    mutable.LinkedHashMap.from(files.map(f => f.getPath -> f))
+
+  override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    files.toArray.groupBy(_.getPath.getParent)
+
+  private lazy val spec = inferPartitioning()
+
+  override def partitionSpec(): PartitionSpec = spec
+
+  /** Every listed file, wherever it sits (the parent takes only the
+    * files directly under a root path when there are no partitions). */
+  override def allFiles(): Seq[FileStatus] = files
+
+  override def refresh(): Unit = ()
+
+  override def equals(other: Any): Boolean = other match {
+    case i: ManifestFileIndex => root == i.root && leafFiles.keySet == i.leafFiles.keySet
+    case _ => false
+  }
+
+  override def hashCode: Int = (root, leafFiles.keySet).hashCode
 }
 
 /** A [[FileIndex]] for Iceberg HIDDEN PARTITIONING: files are grouped by
@@ -179,14 +221,9 @@ object StaticFileIndex {
   def parquetRelation(spark: SparkSession, root: Path,
                       dataSchema: StructType, partitionSchema: StructType,
                       partitions: Seq[(InternalRow, Array[FileStatus])])
-      : DataFrame = {
-    val index = new StaticFileIndex(root, partitionSchema, partitions)
-    val relation = HadoopFsRelation(index, partitionSchema, dataSchema,
-      bucketSpec = None, new ParquetFileFormat,
-      options = Map.empty[String, String])(spark)
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation)
-  }
+      : DataFrame =
+    relation(spark, new StaticFileIndex(root, partitionSchema, partitions),
+      partitionSchema, dataSchema)
 
   /** Build the hidden-partitioned snapshot DataFrame: one parquet scan
     * whose [[TransformFileIndex]] prunes files through the partition
@@ -194,13 +231,26 @@ object StaticFileIndex {
     * columns in the relation). */
   def transformParquetRelation(spark: SparkSession, root: Path,
                                dataSchema: StructType,
-                               index: TransformFileIndex): DataFrame = {
-    val relation = HadoopFsRelation(index, StructType(Nil), dataSchema,
-      bucketSpec = None, new ParquetFileFormat,
-      options = Map.empty[String, String])(spark)
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation)
+                               index: TransformFileIndex): DataFrame =
+    relation(spark, index, StructType(Nil), dataSchema)
+
+  /** The snapshot DataFrame of a version's parquet `files` under `root`
+    * ([[ManifestFileIndex]]): partition columns from their directories,
+    * data schema from the FIRST file's footer, read on the driver — what
+    * `spark.read` infers when the files share one schema, with no Spark
+    * job. */
+  def listedParquet(spark: SparkSession, root: Path, files: Seq[FileStatus]): DataFrame = {
+    val index = new ManifestFileIndex(spark, root, files)
+    relation(spark, index, index.partitionSchema,
+      ParquetReadShim.footerSchema(spark, files.head))
   }
+
+  /** One parquet scan over `index`: Spark's file-source relation. */
+  private def relation(spark: SparkSession, index: FileIndex,
+                       partitionSchema: StructType, dataSchema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema, dataSchema,
+        bucketSpec = None, new ParquetFileFormat, options = Map.empty[String, String])(spark))
 
   /** Parse one partition value from its table-format string serialization
     * into the Catalyst-internal representation of `dt` (Delta and Hive

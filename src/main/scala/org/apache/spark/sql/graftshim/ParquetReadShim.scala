@@ -1,10 +1,14 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -45,6 +49,19 @@ object ParquetReadShim {
       Map(org.apache.spark.sql.execution.datasources.FileFormat
         .OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
+
+  /** The data schema Spark's parquet source infers from `file`'s footer
+    * (the per-footer step of its schema inference: the stored Spark
+    * schema, else the converted parquet one, under the session's parquet
+    * options), nullable as every file source's is. Reads ONE footer on the
+    * driver: no Spark job, no stat (the length comes with `file`). */
+  def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 
   def partitionedFile(path: String, length: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
