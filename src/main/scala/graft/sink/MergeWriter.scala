@@ -39,7 +39,7 @@ import graft.sources.BucketedLake.ManifestEntry
   * failed attempt's files. Readers take the version's file list; direct
   * listers of `data/` ([[CatalogSync]]'s Hive location, specs) see exactly
   * the snapshot once a commit has finished. Every base read, query and
-  * commit alike ([[readFiles]]), builds Spark's parquet relation straight
+  * commit alike, is one [[readFiles]], which builds Spark's parquet relation
   * from the version's entries: their sizes stand in for a stat, Spark's
   * own partition discovery types the columns from the directories under
   * `data/`, and one footer read on the driver gives the schema — no

@@ -22,8 +22,8 @@ class ManifestReadSpec extends SparkSuite {
 
   private def tmp(): String = Files.createTempDirectory("graft-mread").toString
 
-  /** The read every base read was before: Spark lists the files, infers
-    * the partitions under `data/` and reads a footer for the schema. */
+  /** Spark's own read of the same files, the reference: it stats them,
+    * infers the partitions under `data/` and reads a footer for the schema. */
   private def listedRead(t: LakeTable): DataFrame =
     spark.read.option("basePath", s"${t.path}/data")
       .parquet(MergeWriter.baseFiles(spark, t)._2.map(e => new Path(t.path, e.rel).toString): _*)
